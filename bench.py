@@ -110,7 +110,7 @@ def artifact_path(here: str, cpus: int) -> str:
     return local
 
 
-def main() -> None:
+def main() -> int:
     heavy = os.environ.get("PARASLICE_BENCH_HEAVY") == "1"
     sf_dir = os.environ.get(
         "SPARK_GRAFT_SF_DIR",
@@ -218,6 +218,10 @@ def main() -> None:
             times[name] = -1.0
             print(f"# BENCH ERROR {name}: {exc}", file=sys.stderr)
     wallclock = round(time.perf_counter() - t_suite, 4)
+    # a query that raised is recorded as -1 and left out of the total, so a
+    # failure would read as a faster suite: count failures as a headline
+    # scalar and exit non-zero below
+    n_errors = sum(1 for t in times.values() if t < 0)
     total = round(sum(t for t in times.values() if t > 0), 4)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -252,6 +256,7 @@ def main() -> None:
         "sched_probe": sched_probe,
         "cpus": cpus,
         "sf": sf,
+        "n_errors": n_errors,
         "unit": "sec",
         "value": total,
     }
@@ -259,6 +264,7 @@ def main() -> None:
     payload = {
         "metric": metric,
         "value": total,
+        "n_errors": n_errors,
         "unit": "sec",
         "queries": times,
         "sf": sf,
@@ -398,7 +404,11 @@ def main() -> None:
     except OSError as exc:
         print(f"# BENCH_LOCAL.json not written: {exc}", file=sys.stderr)
     spark.stop()
+    if n_errors:
+        print(f"# BENCH FAILED: {n_errors} queries raised", file=sys.stderr)
+        return 1
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

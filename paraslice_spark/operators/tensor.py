@@ -10,16 +10,23 @@ Spark-first:
 - **T2** partitions coordinates into dense mode-0 slice slabs: one RDD
   element = ``(slice_id, np.ndarray(J, K))``, batched per partition — the
   reference's namesake layout, BLAS-friendly, cached across iterations.
-- **T3-T6** per-iteration kernels: numpy MTTKRP inside ``mapPartitions``,
-  ``treeAggregate(depth=2)`` reduction (network carries O(dim×R), never
-  O(IJK)), driver-local R×R Gram/pinv solve, column normalization, and the
-  cheap-fit identity ``‖X−X̂‖² = ‖X‖² − 2⟨M2, C̃⟩ + λᵀ(AᵀA∘BᵀB∘CᵀC)λ``
-  (one cached ‖X‖² pass, no reconstruction).
-- **T7/T8** the ALS driver loop + factor export joined back to natural keys.
+- **T3-T6** per-sweep kernels, two aggregate jobs over the resident slabs
+  (each Spark job has a fixed scheduling cost, so sweep time is a job
+  count): job 1 runs the partition-local mode-0 update (each slab owns its
+  rows of A) and returns ΣAᵀA and the mode-1 MTTKRP partial, with ‖X‖²
+  folded into sweep 1; job 2 returns the mode-2 partial, recomputing the A
+  rows from the slab rather than storing a second slab copy.  Network
+  carries O(dim×R), never O(IJK); the driver does the R×R Gram/pinv solves,
+  folds A's column normalization into the Gram (Ã = A·D⁻¹), and uses the
+  cheap-fit identity ``‖X−X̂‖² = ‖X‖² − 2⟨M2, C̃⟩ + λᵀ(ÃᵀÃ∘BᵀB∘CᵀC)λ``
+  (no reconstruction).
+- **T7/T8** one ALS loop (``_cp_als``) behind ``parafac`` (A collected to
+  the driver) and ``parafac_distributed`` (A stays row-partitioned) +
+  factor export joined back to natural keys.
 
 100 TB discipline (SURVEY §2.5): raw tensor data stays partitioned for the
 whole run; only factors (O(max_dim×R)) and Grams (O(R²)) cross the
-cluster/driver boundary; stale broadcasts are unpersisted every mode sweep.
+cluster/driver boundary; stale broadcasts are unpersisted every sweep.
 """
 
 from __future__ import annotations
@@ -213,42 +220,6 @@ def build_slices(
     return rdd
 
 
-def _mttkrp(slabs, mode: int, shape, rank: int, bA, bB, bC, sc):
-    """T3: distributed MTTKRP — one batched numpy kernel per partition +
-    treeAggregate(depth=2).
-
-    Per batched slab block X (m×J×K) with slice ids ``ids``:
-      mode 0: M[ids,:] = ((X·C) ∘ B).sum(axis=1)        — (m,J,R)→(m,R)
-      mode 1: M       += ((X·C) ∘ A[ids,None,:]).sum(0)  — →(J,R)
-      mode 2: M       += ((Xᵀ·B) ∘ A[ids,None,:]).sum(0) — →(K,R)
-    Partials are (dim×R) ndarrays — that is ALL that crosses the network.
-    """
-    si, sj, sk = shape
-    dim = (si, sj, sk)[mode]
-    zero = np.zeros((dim, rank), dtype=np.float64)
-
-    def seq(acc, item):
-        ids, x = item  # x: (m, J, K)
-        if mode == 0:
-            t = x @ bC.value  # (m, J, R)
-            acc[ids, :] += (t * bB.value[None, :, :]).sum(axis=1)
-        elif mode == 1:
-            t = x @ bC.value  # (m, J, R)
-            acc += (t * bA.value[ids][:, None, :]).sum(axis=0)
-        else:
-            t = np.swapaxes(x, 1, 2) @ bB.value  # (m, K, R)
-            acc += (t * bA.value[ids][:, None, :]).sum(axis=0)
-        return acc
-
-    comb = lambda a, b: a + b  # noqa: E731
-    if dim * rank <= 1_000_000:
-        # partials are small: a flat aggregate (one stage) beats the tree's
-        # extra combiner stage. The tree matters when dim×R partials are
-        # MB-sized and the driver would otherwise ingest n_parts of them.
-        return slabs.aggregate(zero, seq, comb)
-    return slabs.treeAggregate(zero, seq, comb, depth=2)
-
-
 def _solve(mttkrp: np.ndarray, gram_prod: np.ndarray) -> np.ndarray:
     """T4: factor update — driver-local R×R pseudo-inverse."""
     return mttkrp @ np.linalg.pinv(gram_prod)
@@ -259,6 +230,24 @@ def _normalize(factor: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     lam = np.linalg.norm(factor, axis=0)
     lam[lam == 0] = 1.0
     return factor / lam, lam
+
+
+def _a_rows(x: np.ndarray, B: np.ndarray, C: np.ndarray, pinv: np.ndarray):
+    """T3 mode-0 update of one batched slab X (m×J×K): its raw rows of A,
+    ``((X·C) ∘ B).sum_j @ pinv((BᵀB)∘(CᵀC))``.  Each slab owns exactly its
+    mode-0 rows, so the update reads no other slab.  Returns ``(X·C, A rows)``
+    so the caller can reuse X·C for the mode-1 partial."""
+    xc = x @ C  # (m, J, R)
+    return xc, (xc * B[None, :, :]).sum(axis=1) @ pinv
+
+
+def _aggregate(rdd, zero, seq, comb, numel: int):
+    # partials are small: a flat aggregate (one stage) beats the tree's
+    # extra combiner stage. The tree matters when the partials are MB-sized
+    # and the driver would otherwise ingest n_parts of them.
+    if numel <= 1_000_000:
+        return rdd.aggregate(zero, seq, comb)
+    return rdd.treeAggregate(zero, seq, comb, depth=2)
 
 
 @dataclass
@@ -273,105 +262,6 @@ class CPModel:
     n_iter: int
     fit_trace: list = field(default_factory=list)
     shape: tuple = ()
-
-
-def parafac(
-    spark: SparkSession,
-    coords: DataFrame,
-    rank: int = 3,
-    tol: float = 1e-6,
-    max_iter: int = 25,
-    seed: int = 42,
-    n_parts: int = 8,
-) -> CPModel:
-    """T7: CP-ALS driver loop (SURVEY §3.3 lifecycle).
-
-    Control never leaves this function; per iteration each mode does one
-    broadcast (factors down) and one treeAggregate (partials up). Fit uses
-    the Gram identity — no reconstruction pass.
-    """
-    sc = spark.sparkContext
-    shape = tensor_shape(coords)
-    si, sj, sk = shape
-    slabs = build_slices(coords, shape, n_parts)
-    norm_x_sq = slabs.treeAggregate(
-        0.0, lambda acc, it: acc + float((it[1] ** 2).sum()), lambda a, b: a + b, depth=2
-    )
-
-    rng = np.random.default_rng(seed)
-    A = rng.standard_normal((si, rank))
-    B = rng.standard_normal((sj, rank))
-    C = rng.standard_normal((sk, rank))
-    A, _ = _normalize(A)
-    B, _ = _normalize(B)
-    C, _ = _normalize(C)
-    lam = np.ones(rank)
-
-    fit_prev, fit, trace = 0.0, 0.0, []
-    it = 0
-    for it in range(1, max_iter + 1):
-        stale = []
-        bA, bB, bC = sc.broadcast(A), sc.broadcast(B), sc.broadcast(C)
-        stale += [bA, bB, bC]
-
-        m0 = _mttkrp(slabs, 0, shape, rank, bA, bB, bC, sc)
-        A = _solve(m0, (B.T @ B) * (C.T @ C))
-        A, _ = _normalize(A)
-        bA = sc.broadcast(A)
-        stale.append(bA)
-
-        m1 = _mttkrp(slabs, 1, shape, rank, bA, bB, bC, sc)
-        B = _solve(m1, (A.T @ A) * (C.T @ C))
-        B, _ = _normalize(B)
-        bB = sc.broadcast(B)
-        stale.append(bB)
-
-        m2 = _mttkrp(slabs, 2, shape, rank, bA, bB, bC, sc)
-        c_raw = _solve(m2, (A.T @ A) * (B.T @ B))
-        C, lam = _normalize(c_raw)
-
-        # T6 cheap fit: ⟨X,X̂⟩ = Σ M2∘C̃ ;  ‖X̂‖² = λᵀ(AᵀA∘BᵀB∘CᵀC)λ
-        inner = float((m2 * c_raw).sum())
-        norm_model_sq = float(
-            lam @ (((A.T @ A) * (B.T @ B) * (C.T @ C)) @ lam)
-        )
-        resid_sq = max(0.0, norm_x_sq - 2.0 * inner + norm_model_sq)
-        fit = 1.0 - np.sqrt(resid_sq) / np.sqrt(norm_x_sq)
-        trace.append(fit)
-
-        for b in stale:
-            b.unpersist()
-        if it > 1 and abs(fit - fit_prev) < tol:
-            break
-        fit_prev = fit
-
-    # canonical order: components by λ descending (deterministic tiebreak
-    # not needed — λ ties have measure zero with random init)
-    order = np.argsort(-lam)
-    model = CPModel(
-        A=A[:, order], B=B[:, order], C=C[:, order], lam=lam[order],
-        fit=float(fit), n_iter=it, fit_trace=trace, shape=shape,
-    )
-    slabs.unpersist()
-    return model
-
-
-# --------------------------------------------------------------------------
-# Distributed-A CP-ALS (VERDICT r01 #9, docs/SCALE.md §CP-ALS extension)
-# --------------------------------------------------------------------------
-#
-# When the mode-0 dimension is huge (10^8 users), the I×R factor A no longer
-# fits the driver or a broadcast.  The slab layout makes the fix natural:
-# mode-0 MTTKRP writes only acc[ids] and modes 1/2 read only A[ids] — each
-# slab ever touches exactly its own rows of A.  So A lives row-partitioned
-# WITH the slabs: the mode-0 update is fully partition-local (M0_blk @ pinv,
-# zero shuffle), and the network carries only the R×R Gram AᵀA, the J×R /
-# K×R partials, and the (tiny) B/C broadcasts.  A is never normalized in
-# place; its raw column scales D = sqrt(diag(AᵀA_raw)) are divided out of
-# the Gram and the partials driver-side (Ã = A·D⁻¹ ⇒ M̃ = M·D⁻¹), which is
-# algebraically identical to the driver-local path without a second
-# distributed pass.  Lineage stays flat: each iteration maps over the
-# persisted slabs root, never over the previous iteration's RDD.
 
 
 @dataclass
@@ -390,6 +280,155 @@ class CPModelDist:
     shape: tuple = ()
 
 
+def _cp_als(
+    spark: SparkSession,
+    coords: DataFrame,
+    rank: int,
+    tol: float,
+    max_iter: int,
+    seed: int,
+    n_parts: int,
+    distributed: bool,
+) -> CPModel | CPModelDist:
+    """T3-T7: the CP-ALS loop behind :func:`parafac` and
+    :func:`parafac_distributed`.
+
+    Every sweep runs two aggregate jobs over the persisted slabs, since each
+    Spark job carries a fixed scheduling cost that dwarfs the numpy work:
+
+    1. each slab computes its raw A rows (:func:`_a_rows`) and returns the
+       Gram ΣAᵀA and the mode-1 partial M1 = Σ (X·C)∘A — plus ‖X‖² in sweep
+       1, and the A rows themselves when A is driver-local;
+    2. each slab recomputes its A rows from X with the same B, C and pinv
+       and returns the mode-2 partial M2 = Σ (Xᵀ·B)∘A — one (m,J,K)@(K,R)
+       matmul instead of a second, persisted copy of the slabs.
+
+    A is never normalized in place: its column scales D = sqrt(diag(AᵀA))
+    are divided out of the Gram and the partials on the driver (Ã = A·D⁻¹
+    ⇒ M̃ = M·D⁻¹), algebraically the normalized update.  The fit uses the
+    Gram identity ‖X−X̂‖² = ‖X‖² − 2⟨M2, C̃⟩ + λᵀ(ÃᵀÃ∘BᵀB∘CᵀC)λ — no
+    reconstruction pass."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be at least 1, got {max_iter}")
+    sc = spark.sparkContext
+    shape = tensor_shape(coords)
+    si, sj, sk = shape
+    slabs = build_slices(coords, shape, n_parts)
+
+    rng = np.random.default_rng(seed)
+    if not distributed:
+        rng.standard_normal((si, rank))  # unused initial A: keeps B, C per seed
+    B, _ = _normalize(rng.standard_normal((sj, rank)))
+    C, _ = _normalize(rng.standard_normal((sk, rank)))
+    a_dim = 0 if distributed else si  # rows of A collected by job 1
+
+    norm_x_sq = 0.0
+    fit_prev, fit, trace = 0.0, 0.0, []
+    for it in range(1, max_iter + 1):
+        pinv = np.linalg.pinv((B.T @ B) * (C.T @ C))
+        bB, bC = sc.broadcast(B), sc.broadcast(C)
+
+        def seq1(acc, item, _p=pinv, _bB=bB, _bC=bC, _first=it == 1):
+            gram, m1, nx, a_acc = acc
+            ids, x = item
+            xc, a = _a_rows(x, _bB.value, _bC.value, _p)
+            if a_dim:
+                a_acc[ids] = a
+            if _first:
+                nx += float((x**2).sum())
+            return gram + a.T @ a, m1 + (xc * a[:, None, :]).sum(axis=0), nx, a_acc
+
+        zero = (np.zeros((rank, rank)), np.zeros((sj, rank)), 0.0, np.zeros((a_dim, rank)))
+        gram_raw, m1, nx, a_raw = _aggregate(
+            slabs, zero, seq1, lambda p, q: tuple(u + v for u, v in zip(p, q)),
+            (rank + sj + a_dim) * rank,
+        )
+        if it == 1:
+            norm_x_sq = nx
+
+        d = np.sqrt(np.diag(gram_raw))
+        d[d == 0] = 1.0
+        gram_a = gram_raw / np.outer(d, d)  # ÃᵀÃ
+        B_new, _ = _normalize(_solve(m1 / d, gram_a * (C.T @ C)))
+        bB2 = sc.broadcast(B_new)
+
+        def seq2(acc, item, _p=pinv, _bB=bB, _bC=bC, _bB2=bB2):
+            _ids, x = item
+            _, a = _a_rows(x, _bB.value, _bC.value, _p)
+            return acc + ((np.swapaxes(x, 1, 2) @ _bB2.value) * a[:, None, :]).sum(axis=0)
+
+        m2 = _aggregate(slabs, np.zeros((sk, rank)), seq2, np.add, sk * rank) / d
+        c_raw = _solve(m2, gram_a * (B_new.T @ B_new))
+        a_args = (B, C, pinv)  # this sweep's A rows: _a_rows(x, *a_args)[1]
+        B = B_new
+        C, lam = _normalize(c_raw)
+
+        # T6 cheap fit: ⟨X,X̂⟩ = Σ M2∘C̃ ;  ‖X̂‖² = λᵀ(ÃᵀÃ∘BᵀB∘CᵀC)λ
+        inner = float((m2 * c_raw).sum())
+        norm_model_sq = float(lam @ ((gram_a * (B.T @ B) * (C.T @ C)) @ lam))
+        resid_sq = max(0.0, norm_x_sq - 2.0 * inner + norm_model_sq)
+        fit = 1.0 - np.sqrt(resid_sq) / np.sqrt(norm_x_sq)
+        trace.append(fit)
+
+        for b in (bB, bC, bB2):
+            b.unpersist()
+        if it > 1 and abs(fit - fit_prev) < tol:
+            break
+        fit_prev = fit
+
+    # canonical order: components by λ descending (deterministic tiebreak
+    # not needed — λ ties have measure zero with random init)
+    order = np.argsort(-lam)
+    done = dict(
+        B=B[:, order], C=C[:, order], lam=lam[order],
+        fit=float(fit), n_iter=it, fit_trace=trace, shape=shape,
+    )
+    if distributed:
+        a_blocks = slabs.map(
+            lambda t: (t[0], (_a_rows(t[1], *a_args)[1] / d)[:, order])
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        a_blocks.count()  # materialize before releasing the slabs
+        slabs.unpersist()
+        return CPModelDist(a_blocks=a_blocks, **done)
+    slabs.unpersist()
+    return CPModel(A=(a_raw / d)[:, order], **done)
+
+
+def parafac(
+    spark: SparkSession,
+    coords: DataFrame,
+    rank: int = 3,
+    tol: float = 1e-6,
+    max_iter: int = 25,
+    seed: int = 42,
+    n_parts: int = 8,
+) -> CPModel:
+    """T7: CP-ALS with every factor driver-local (SURVEY §3.3 lifecycle).
+
+    Control never leaves the driver; each sweep is two aggregate jobs over
+    the resident slabs (see :func:`_cp_als`), with factor broadcasts down
+    and O(dim×R) partials up.  The mode-0 update is partition-local and the
+    first job also carries A's rows to the driver.  ‖X‖² rides sweep 1's
+    first job — no separate pass.  Fit uses the Gram identity — no
+    reconstruction pass."""
+    return _cp_als(spark, coords, rank, tol, max_iter, seed, n_parts, distributed=False)
+
+
+# --------------------------------------------------------------------------
+# Distributed-A CP-ALS (VERDICT r01 #9, docs/SCALE.md §CP-ALS extension)
+# --------------------------------------------------------------------------
+#
+# When the mode-0 dimension is huge (10^8 users), the I×R factor A no longer
+# fits the driver or a broadcast.  The slab layout makes the fix natural:
+# mode-0 MTTKRP writes only acc[ids] and modes 1/2 read only A[ids] — each
+# slab ever touches exactly its own rows of A.  So A lives row-partitioned
+# WITH the slabs: the mode-0 update is fully partition-local (zero shuffle),
+# and the network carries only the R×R Gram AᵀA, the J×R / K×R partials,
+# and the (tiny) B/C broadcasts.  The A rows are recomputed from the slabs
+# where needed instead of being stored, so the only persisted RDDs are the
+# slabs and, at the end, the exported ``a_blocks``.
+
+
 def parafac_distributed(
     spark: SparkSession,
     coords: DataFrame,
@@ -400,101 +439,11 @@ def parafac_distributed(
     n_parts: int = 8,
 ) -> CPModelDist:
     """T7-dist: CP-ALS with the mode-0 factor row-partitioned (never on the
-    driver, never broadcast).  Per iteration: one partition-local map (A
-    update fused with the slab scan) + two aggregate jobs (Gram+M1, then
-    M2).  Same kernels and fit identity as :func:`parafac`."""
-    sc = spark.sparkContext
-    shape = tensor_shape(coords)
-    si, sj, sk = shape
-    slabs = build_slices(coords, shape, n_parts)
-    norm_x_sq = slabs.treeAggregate(
-        0.0, lambda acc, it: acc + float((it[1] ** 2).sum()), lambda a, b: a + b, depth=2
-    )
-
-    rng = np.random.default_rng(seed)
-    B, _ = _normalize(rng.standard_normal((sj, rank)))
-    C, _ = _normalize(rng.standard_normal((sk, rank)))
-    lam = np.ones(rank)
-
-    def agg(rdd, zero, seq, comb, numel):
-        # same threshold as _mttkrp: tree only when partials are MB-sized
-        if numel <= 1_000_000:
-            return rdd.aggregate(zero, seq, comb)
-        return rdd.treeAggregate(zero, seq, comb, depth=2)
-
-    state = None
-    fit_prev, fit, trace = 0.0, 0.0, []
-    it = 0
-    for it in range(1, max_iter + 1):
-        bB, bC = sc.broadcast(B), sc.broadcast(C)
-        pinv_bc = np.linalg.pinv((B.T @ B) * (C.T @ C))
-
-        def update_a(items, _p=pinv_bc, _bB=bB, _bC=bC):
-            # mode-0 update, partition-local: each slab owns its A rows
-            for ids, x in items:
-                m0 = ((x @ _bC.value) * _bB.value[None, :, :]).sum(axis=1)
-                yield ids, x, m0 @ _p
-
-        prev = state
-        state = slabs.mapPartitions(update_a).persist(StorageLevel.MEMORY_AND_DISK)
-
-        def seq1(acc, item, _bC=bC):
-            g, m1 = acc
-            _ids, x, a = item
-            g += a.T @ a
-            m1 += ((x @ _bC.value) * a[:, None, :]).sum(axis=0)
-            return g, m1
-
-        gram_raw, m1_raw = agg(
-            state,
-            (np.zeros((rank, rank)), np.zeros((sj, rank))),
-            seq1,
-            lambda p, q: (p[0] + q[0], p[1] + q[1]),
-            (rank + sj) * rank,
-        )
-
-        d_inv = 1.0 / np.sqrt(np.clip(np.diag(gram_raw), 1e-300, None))
-        gram_a = gram_raw * d_inv[:, None] * d_inv[None, :]  # Ã = A·D⁻¹
-        B = _solve(m1_raw * d_inv[None, :], gram_a * (C.T @ C))
-        B, _ = _normalize(B)
-        bB2 = sc.broadcast(B)
-
-        def seq2(acc, item, _bB2=bB2):
-            _ids, x, a = item
-            return acc + ((np.swapaxes(x, 1, 2) @ _bB2.value) * a[:, None, :]).sum(axis=0)
-
-        m2 = (
-            agg(state, np.zeros((sk, rank)), seq2, lambda p, q: p + q, sk * rank)
-            * d_inv[None, :]
-        )
-        c_raw = _solve(m2, gram_a * (B.T @ B))
-        C, lam = _normalize(c_raw)
-
-        inner = float((m2 * c_raw).sum())
-        norm_model_sq = float(lam @ ((gram_a * (B.T @ B) * (C.T @ C)) @ lam))
-        resid_sq = max(0.0, norm_x_sq - 2.0 * inner + norm_model_sq)
-        fit = 1.0 - np.sqrt(resid_sq) / np.sqrt(norm_x_sq)
-        trace.append(fit)
-
-        for b in (bB, bC, bB2):
-            b.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        if it > 1 and abs(fit - fit_prev) < tol:
-            break
-        fit_prev = fit
-
-    order = np.argsort(-lam)
-    a_blocks = state.map(
-        lambda t, _d=d_inv, _o=order: (t[0], (t[2] * _d[None, :])[:, _o])
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    a_blocks.count()  # materialize before releasing the parents
-    state.unpersist()
-    slabs.unpersist()
-    return CPModelDist(
-        a_blocks=a_blocks, B=B[:, order], C=C[:, order], lam=lam[order],
-        fit=float(fit), n_iter=it, fit_trace=trace, shape=shape,
-    )
+    driver, never broadcast).  Same two aggregate jobs per sweep, kernels
+    and fit identity as :func:`parafac`; no per-sweep copy of the slabs is
+    stored.  One final map over the slabs persists the normalized A rows as
+    ``a_blocks`` (the caller unpersists them)."""
+    return _cp_als(spark, coords, rank, tol, max_iter, seed, n_parts, distributed=True)
 
 
 def dist_factors_a_df(spark: SparkSession, model: CPModelDist, scale: int = 4) -> DataFrame:

@@ -53,17 +53,20 @@ def scaled_scan_partitions(
     row count comes from the parquet FOOTER (driver-side metadata read, no
     job); the result is clamped to spark.sql.shuffle.partitions — the knob
     clusters already size.  Callers skip the repartition entirely when
-    this returns 1, keeping small-SF plans byte-identical."""
+    this returns 1, keeping small-SF plans byte-identical.  An unreadable
+    footer also gives 1: the fallback must leave the plan as it was, never
+    spread an unknown (possibly tiny) table over every shuffle partition."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     try:
-        import pyarrow.parquet as pq
-
         rows = pq.ParquetFile(
             f"{sf_dir.rstrip('/')}/{table}.parquet"
         ).metadata.num_rows
-        return max(1, min(cap, rows // rows_per_partition))
-    except Exception:
-        return cap
+    except (OSError, pa.ArrowException):
+        return 1
+    return max(1, min(cap, rows // rows_per_partition))
 
 
 def _repair_events(df: DataFrame) -> DataFrame:

@@ -157,6 +157,12 @@ def _clear_memo_caches() -> None:
                     pass
                 similarity._free_local_checkpoint(df)
         cache.clear()
+    # fitted tensor models hold no DataFrame; only the distributed CP
+    # model keeps executor blocks (its persisted a_blocks)
+    for model in tensor._model_cache_dist.values():
+        model.a_blocks.unpersist()
+    for cache in (tensor._model_cache, tensor._model_cache_dist, tensor._tucker_cache):
+        cache.clear()
 
 
 #: queries whose pipeline rides a memoized localCheckpoint base — both

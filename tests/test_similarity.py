@@ -358,5 +358,8 @@ def test_emb_base_partitions_scale_adaptive(spark, tmp_path):
         str(tmp_path / "embeddings.parquet"),
     )
     assert _emb_base_partitions(spark, str(tmp_path)) == cap
-    # unreadable path falls back to the cap, never raises
-    assert _emb_base_partitions(spark, str(tmp_path / "missing")) == cap
+    # an unreadable footer (missing file, or not parquet) falls back to 1,
+    # never raises: the caller then keeps its plan unspread
+    assert _emb_base_partitions(spark, str(tmp_path / "missing")) == 1
+    (tmp_path / "embeddings.parquet").write_bytes(b"not a parquet file")
+    assert _emb_base_partitions(spark, str(tmp_path)) == 1

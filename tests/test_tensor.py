@@ -14,13 +14,16 @@ from paraslice_spark.operators.tensor import (
 from tests.conftest import SF_SMALL
 
 
-def _planted_coords(spark, si=12, sj=6, sk=10, rank=3, seed=7):
-    """Dense rank-`rank` tensor from seeded factors, as a coords DataFrame."""
+def _planted_coords(spark, si=12, sj=6, sk=10, rank=3, seed=7, noise=0.0):
+    """Dense rank-`rank` tensor from seeded factors, plus ``noise`` times
+    Gaussian noise, as a coords DataFrame."""
     rng = np.random.default_rng(seed)
     A = rng.standard_normal((si, rank))
     B = rng.standard_normal((sj, rank))
     C = rng.standard_normal((sk, rank))
     X = np.einsum("ir,jr,kr->ijk", A, B, C)
+    if noise:
+        X = X + noise * rng.standard_normal(X.shape)
     rows = [
         (i, j, k, float(X[i, j, k]))
         for i in range(si)
@@ -59,6 +62,16 @@ def test_same_seed_reproducible(spark):
     np.testing.assert_allclose(m1.lam, m2.lam, rtol=1e-12)
     np.testing.assert_allclose(m1.A, m2.A, rtol=1e-10)
     assert m1.fit == pytest.approx(m2.fit, rel=1e-12)
+
+
+@pytest.mark.parametrize("variant", ["parafac", "parafac_distributed"])
+def test_max_iter_below_one_rejected(spark, variant):
+    """A run needs at least one sweep to have a model to return."""
+    from paraslice_spark.operators import tensor
+
+    coords = _planted_coords(spark, seed=17)
+    with pytest.raises(ValueError, match="max_iter"):
+        getattr(tensor, variant)(spark, coords, max_iter=0)
 
 
 def test_slices_cover_tensor_exactly(spark):
@@ -104,6 +117,114 @@ def test_distributed_matches_driver_local_lambdas(spark):
     dist = parafac_distributed(spark, coords, rank=3, max_iter=40, seed=4, n_parts=3)
     assert dist.fit >= 0.999 and local.fit >= 0.999
     np.testing.assert_allclose(dist.lam, local.lam, rtol=1e-3)
+
+
+def _numpy_cp_als(X, rank, sweeps, seed, draw_a):
+    """Dense CP-ALS reference: full-tensor MTTKRPs, modes updated A, B, C in
+    order with unit-norm columns, fit from the explicit reconstruction.
+    Same seeded init as the engine: ``draw_a`` draws the (unused) initial A
+    first, as parafac does."""
+    rng = np.random.default_rng(seed)
+    if draw_a:
+        rng.standard_normal((X.shape[0], rank))
+    unit = lambda f: f / np.linalg.norm(f, axis=0)  # noqa: E731
+    B = unit(rng.standard_normal((X.shape[1], rank)))
+    C = unit(rng.standard_normal((X.shape[2], rank)))
+    trace = []
+    for _ in range(sweeps):
+        A = unit(np.einsum("ijk,jr,kr->ir", X, B, C) @ np.linalg.pinv((B.T @ B) * (C.T @ C)))
+        B = unit(np.einsum("ijk,ir,kr->jr", X, A, C) @ np.linalg.pinv((A.T @ A) * (C.T @ C)))
+        C = np.einsum("ijk,ir,jr->kr", X, A, B) @ np.linalg.pinv((A.T @ A) * (B.T @ B))
+        lam = np.linalg.norm(C, axis=0)
+        C = C / lam
+        Xhat = np.einsum("ir,jr,kr->ijk", A * lam, B, C)
+        trace.append(1.0 - np.linalg.norm(X - Xhat) / np.linalg.norm(X))
+    return trace
+
+
+@pytest.mark.parametrize("variant", ["parafac", "parafac_distributed"])
+def test_fit_trace_matches_numpy_reference(spark, variant):
+    """Both variants run the textbook ALS sweep: the fused two-job loop,
+    the driver-side rescaling of A and the Gram-identity fit reproduce a
+    dense numpy reference sweep by sweep.  The noise keeps the fit away
+    from 1, where the Gram identity's cancellation would dominate."""
+    from paraslice_spark.operators import tensor
+
+    shape = (20, 6, 7)
+    coords = _planted_coords(spark, *shape, seed=31, noise=0.5)
+    X = _dense_from(coords, shape)
+    fn = getattr(tensor, variant)
+    model = fn(spark, coords, rank=3, tol=0.0, max_iter=5, seed=8, n_parts=3)
+    if variant == "parafac_distributed":
+        model.a_blocks.unpersist()
+    want = _numpy_cp_als(X, 3, 5, seed=8, draw_a=variant == "parafac")
+    assert model.n_iter == 5
+    np.testing.assert_allclose(model.fit_trace, want, rtol=0, atol=1e-9)
+
+
+def _jobs_in_group(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_two_jobs_per_sweep(spark):
+    """Every Spark job costs a fixed scheduling floor, so the job count is
+    the CP-ALS cost model: one shape job, then two aggregates per sweep;
+    the distributed variant adds one job that materializes a_blocks."""
+    from paraslice_spark.operators.tensor import parafac_distributed
+
+    sc = spark.sparkContext
+    coords = _planted_coords(spark, seed=37)
+    _, n = _jobs_in_group(
+        sc, "cp-jobs-local", lambda: parafac(spark, coords, tol=0.0, max_iter=3, n_parts=3)
+    )
+    assert n == 1 + 2 * 3
+    model, n = _jobs_in_group(
+        sc, "cp-jobs-dist",
+        lambda: parafac_distributed(spark, coords, tol=0.0, max_iter=3, n_parts=3),
+    )
+    model.a_blocks.unpersist()
+    assert n == 1 + 2 * 3 + 1
+
+
+@pytest.mark.parametrize("variant", ["parafac", "parafac_distributed"])
+def test_early_stop_releases_slabs_and_broadcasts(spark, monkeypatch, variant):
+    """After a ``tol`` stop nothing the loop persisted or broadcast stays
+    behind except the distributed model's own a_blocks."""
+    from pyspark.broadcast import Broadcast
+
+    from paraslice_spark.operators import tensor
+
+    sc = spark.sparkContext
+    made, released = [], set()
+    real_broadcast, real_unpersist = sc.broadcast, Broadcast.unpersist
+
+    def broadcast(value):
+        made.append(real_broadcast(value))
+        return made[-1]
+
+    def unpersist(self, blocking=False):
+        released.add(id(self))
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(sc, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    coords = _planted_coords(spark, seed=41)
+    before = set(sc._jsc.getPersistentRDDs())
+    model = getattr(tensor, variant)(spark, coords, tol=1.0, max_iter=10, n_parts=3)
+    after = set(sc._jsc.getPersistentRDDs())
+    assert model.n_iter == 2  # the first sweep that can compare fits stops
+    assert made and all(id(b) in released for b in made)
+    if variant == "parafac_distributed":
+        assert after - before == {model.a_blocks.id()}
+        model.a_blocks.unpersist()
+    else:
+        assert after - before == set()
 
 
 def test_fixture_tensor_decomposes(spark):
