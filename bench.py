@@ -119,6 +119,7 @@ def main() -> int:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     import paraslice_spark.operators  # noqa: F401
+    from paraslice_spark.memo import build_log
     from paraslice_spark.registry import QUERIES
     from paraslice_spark.session import get_session
     from paraslice_spark.sources.io import load_tables
@@ -190,12 +191,14 @@ def main() -> int:
     )
     times: dict[str, float] = {}
     run1: dict[str, float] = {}
+    memo_builds: dict[str, list] = {}
     noisy: dict[str, float] = {}
     t_suite = time.perf_counter()
     cpu_suite0 = cpu_sample()
     for name, fn in sorted(bench_queries.items()):
         best = float("inf")
         cpu0 = cpu_sample()
+        n_built = len(build_log)
         try:
             for i in range(runs):
                 t0 = time.perf_counter()
@@ -206,6 +209,10 @@ def main() -> int:
                     # the shared build the best-of-N replay hides (heavy-arm
                     # reading aid; file artifact only)
                     run1[name] = round(dt, 4)
+                    if len(build_log) > n_built:
+                        memo_builds[name] = [
+                            [m, round(t, 4)] for m, _, t in build_log[n_built:]
+                        ]
                 best = min(best, dt)
             times[name] = round(best, 4)
             sp = steal_pct(cpu0, cpu_sample())
@@ -244,7 +251,7 @@ def main() -> int:
     # so the line is printed COMPACT (no spaces) with the big per-query map
     # FIRST and the headline scalars LAST — a truncated tail still ends
     # with value/unit/sf/probes, and a full-line parse is order-agnostic.
-    # shared_builds / steal detail / normalized column live only in the
+    # memo_builds / steal detail / normalized column live only in the
     # file artifact below.
     metric = "heavy_arm_best_of_runs_sum" if heavy else "suite_best_of_runs_sum"
     stdout_line = {
@@ -276,101 +283,10 @@ def main() -> int:
         "sched_probe": sched_probe,
         "queries_stage_norm": queries_stage_norm,
         "queries_run1": run1,
-        # ADVICE r6: per-query timings for memoized families are
-        # run-order-dependent — the FIRST consumer (alphabetical) pays the
-        # shared build; later consumers read the localCheckpoint for ~0 s.
-        "shared_builds": {
-            "cdc_change_log": [
-                # alphabetically FIRST consumer pays the memoized
-                # checkpointed change-log build (one events scan + bounds)
-                "cdc_log_compaction_audit",
-                "cdc_merge_classify_audit", "cdc_resurrection_audit",
-                "cdc_snapshot_diff", "cdc_upsert_last_wins",
-            ],
-            "knn_edge_table": [
-                # alphabetically FIRST consumer pays the shared build;
-                # graph_clustering_coefficient (r13) now leads the family
-                "graph_clustering_coefficient",
-                "graph_degree_assortativity", "graph_degree_distribution",
-                "graph_knn_jaccard",
-                "graph_lpa_communities", "graph_pagerank_knn",
-                "graph_triangle_count", "similarity_knn_graph",
-                # similarity_ann_recall left r13: its default truth is now
-                # the linear broadcast-cohort scan (VERDICT r12 #2), so it
-                # no longer consumes the memoized kNN graph.
-            ],
-            "decontamination_pair_table": [
-                "pipeline_dataset_build", "text_decontaminate",
-            ],
-            "minhash_shingles_and_signatures": [
-                "dedup_method_agreement", "dedup_minhash_estimate_error",
-                "dedup_minhash_pairs",
-            ],
-            "ngram_jaccard_pair_table": [
-                "dedup_edit_distance", "dedup_group_size_histogram",
-                "dedup_groups", "dedup_groups_star", "dedup_keep_best",
-                "dedup_method_agreement", "dedup_ngram_jaccard",
-                "pipeline_dedup_dataset",
-            ],
-            "simhash_table": [
-                "dedup_method_agreement", "dedup_simhash_bands",
-            ],
-            "emb_base": [
-                # the memoized embeddings array→double checkpoint
-                # (_emb_base_cached, introduced r14 at 674ea62; three more
-                # consumers moved onto it in r15) — alphabetically FIRST
-                # consumer pays the one-time build + checkpoint
-                "dedup_embedding_cosine",
-                "embedding_dim_truncation_audit",
-                "embedding_quant_bits_sweep",  # r16 heavy-arm continuation
-                "similarity_ann_recall", "similarity_ivf_ann",
-                "similarity_ivfpq_ann", "similarity_lsh_ann",
-                "similarity_signlsh_ann",      # r16 heavy-arm continuation
-                "similarity_signlsh_band_sweep",  # r16 heavy-arm continuation
-                "similarity_topk_cosine",
-            ],
-            "ivf_centroids_and_pq_codebooks": [
-                "similarity_ann_recall", "similarity_ivf_ann",
-                "similarity_ivfpq_ann",
-            ],
-            "lineitem_col_histogram": [
-                # r16: list completed — eqdepth + join-cardinality also ride
-                # the memoized _lineitem_col_hist checkpoint
-                "stats_collect_lineitem",
-                "stats_eqdepth_histogram_lineitem",
-                "stats_histogram_lineitem", "stats_join_cardinality_audit",
-                "stats_shuffle_skew_audit",
-            ],
-            "watermark_prefix_frame": [
-                "events_watermark_delay_sweep", "events_watermark_late_replay",
-            ],
-            "tensor_coords_cache": [
-                "parafac_cp_als", "parafac_cp_als_dist", "parafac_factors_a",
-                "tensor_mode_skew_profile", "tensor_slices",
-                "tucker_hosvd_core",
-            ],
-            # each declared real-streaming replay executes its stream ONCE
-            # per session+sf and checkpoints the ledger: its best-of-N row
-            # is the checkpoint replay; the stream's own cost (~5-16 s)
-            # lands in wallclock_all_runs on the first run.  The two
-            # replays do NOT share a build (separate memo caches), so each
-            # gets its own entry (ADVICE r11 #1).
-            "session_stream_replay_result": [
-                "stream_session_watermark_replay",
-            ],
-            "tumbling_stream_replay_result": [
-                "stream_tumbling_watermark_replay",
-            ],
-            "update_mode_stream_replay_result": [
-                "stream_update_mode_replay",
-            ],
-            "complete_mode_stream_replay_result": [
-                "stream_complete_mode_replay",
-            ],
-            "session_complete_stream_replay_result": [
-                "stream_session_complete_replay",
-            ],
-        },
+        # per-query timings for memoized families are run-order-dependent:
+        # the query whose first run builds a memo pays for it, later
+        # consumers read the materialization
+        "memo_builds": memo_builds,
     }
     print(json.dumps(stdout_line, separators=(",", ":")))
     # BENCH_r{N}.json keeps only the stdout tail, losing the front of the

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from paraslice_spark.functions.canon import micros_units
+from paraslice_spark.memo import memo
 from paraslice_spark.registry import query
 from paraslice_spark.sources.io import load_tables
 
@@ -101,21 +102,15 @@ def _cdc_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_cdc_log_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def _cdc_log_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized checkpointed change log per (session, sf) — five audit
-    consumers ride one materialization (the _knn_uedges_cached pattern;
-    cache-clear entry lives in conf-invariance _clear_memo_caches)."""
-    from paraslice_spark.sources.io import _session_key
-
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _cdc_log_cache:
-        _cdc_log_cache[key] = _cdc_log(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-    return _cdc_log_cache[key]
+    consumers ride one materialization."""
+    return memo(
+        spark,
+        sf_dir,
+        "cdc_log",
+        lambda: _cdc_log(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def _cdc_state(log: DataFrame, alive_only: bool = False) -> DataFrame:

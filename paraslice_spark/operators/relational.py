@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from paraslice_spark.functions.canon import cents, md5_u32, md5_u32_sql
+from paraslice_spark.memo import memo
 from paraslice_spark.registry import query
 from paraslice_spark.sources.io import load_tables
 
@@ -294,12 +295,6 @@ _HIST_STACK_SQL = """(
         SELECT 'l_suppkey', l_suppkey FROM lineitem)"""
 
 
-#: per-(session, sf) memo of the (col, v, cnt) histogram — the shared base
-#: of the CBO pair (the _knn_cache contract: eager localCheckpoint built on
-#: first use, reused by every later consumer in the session)
-_col_hist_cache: dict = {}
-
-
 def _lineitem_col_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized per-(col, value) COUNT HISTOGRAM of the 5 profiled
     lineitem columns (NULLs kept as their own v row so null accounting
@@ -307,18 +302,17 @@ def _lineitem_col_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     are cheap rollups of this one saturating-domain frame (~60k distinct
     values per column at any corpus size), so the expensive distinct
     expansion runs ONCE per (session, sf)."""
-    from paraslice_spark.sources.io import _session_key
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _col_hist_cache:
+    def build() -> DataFrame:
         li = load_tables(spark, sf_dir)["lineitem"]
-        _col_hist_cache[key] = (
+        return (
             li.selectExpr(_HIST_STACK)
             .groupBy("col", "v")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .localCheckpoint(eager=True)
         )
-    return _col_hist_cache[key]
+
+    return memo(spark, sf_dir, "col_hist", build)
 
 
 @query(

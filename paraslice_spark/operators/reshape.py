@@ -22,6 +22,7 @@ from paraslice_spark.functions.canon import (
     rnd,
     split_label,
 )
+from paraslice_spark.memo import memo
 from paraslice_spark.registry import query
 from paraslice_spark.session import vocab_broadcast
 from paraslice_spark.sources.io import load_tables
@@ -3668,25 +3669,19 @@ def events_watermark_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-(session, sf) memo of the md5-permuted prefix frame — the shared
-#: base of the late replay and the delay sweep (the _knn_cache contract)
-_replay_wm_cache: dict = {}
-
-
 def _replay_wm_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (arrival frame + prefix_max) for the planted-disorder
     surfaces: the three-level prefix scan runs ONCE per (session, sf)
     and both declared consumers (per-hour replay, delay sweep) are
     cheap rollups of it."""
-    from paraslice_spark.sources.io import _session_key
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _replay_wm_cache:
+    def build() -> DataFrame:
         ev = load_tables(spark, sf_dir)["events"]
-        _replay_wm_cache[key] = _wm_prefix_frame(
+        return _wm_prefix_frame(
             _replay_arrival_frame(ev), ["h", "event_id"]
         ).localCheckpoint(eager=True)
-    return _replay_wm_cache[key]
+
+    return memo(spark, sf_dir, "replay_wm", build)
 
 
 def _replay_arrival_frame(ev: DataFrame) -> DataFrame:

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from paraslice_spark.functions.canon import md5_u32, md5_u32_sql, rnd
+from paraslice_spark.memo import _free_local_checkpoint, memo
 from paraslice_spark.registry import query
 from paraslice_spark.sources.io import load_tables
 
@@ -46,14 +47,6 @@ def _l2_dist(a, b):
     )
 
 
-#: (session, sf) → eagerly-checkpointed (vec_id, emb-as-double) base shared
-#: by the ANN queries that re-read it for quantizer fit + assignment +
-#: verify passes — replaces one naked per-invocation persist per consumer
-#: (the ADVICE r6 leak class) with one bounded materialization, same
-#: contract as _knn_cache/_mh_base_cache.
-_emb_base_cache: dict[tuple[str, str], "DataFrame"] = {}
-
-
 def _emb_base_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Scale-adaptive partition count for the embeddings base (r16, guide
     §2/§6): the single parquet file scans as ONE split at every fixture SF
@@ -71,10 +64,12 @@ def _emb_base_partitions(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _emb_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from paraslice_spark.sources.io import _session_key
+    """Eagerly-checkpointed (vec_id, emb-as-double) base shared by the ANN
+    queries that re-read it for quantizer fit + assignment + verify passes
+    — one bounded materialization per (session, sf) instead of one naked
+    per-invocation persist per consumer (the ADVICE r6 leak class)."""
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _emb_base_cache:
+    def build() -> DataFrame:
         e = load_tables(spark, sf_dir)["embeddings"]
         base = e.select("vec_id", _as_double(F.col("embedding")).alias("emb"))
         n_part = _emb_base_partitions(spark, sf_dir)
@@ -84,8 +79,9 @@ def _emb_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             # float k-means fits feed rows-only queries with fixed top-k
             # row counts — see OPTIMIZATION_r16.md
             base = base.repartition(n_part, F.col("vec_id"))
-        _emb_base_cache[key] = base.localCheckpoint(eager=True)
-    return _emb_base_cache[key]
+        return base.localCheckpoint(eager=True)
+
+    return memo(spark, sf_dir, "emb_base", build)
 
 
 @query(
@@ -208,9 +204,6 @@ _IVF_NLIST = 16  # coarse-quantizer cells
 _IVF_NPROBE = 4  # cells probed per query
 _IVF_ITERS = 2  # Lloyd refinement sweeps
 
-#: (application id, sf_dir) -> fitted centroid matrix (see _session_key)
-_ivf_cache: dict[tuple[str, str], "object"] = {}
-
 
 def _ivf_centroids(base: DataFrame, n_list: int, n_iters: int, seed: int):
     """Fit the IVF coarse quantizer: deterministic hash-ordered sample of
@@ -253,6 +246,19 @@ def _ivf_centroids(base: DataFrame, n_list: int, n_iters: int, seed: int):
     return cents
 
 
+def _ivf_centroids_cached(spark: SparkSession, sf_dir: str):
+    """The IVF quantizer fit, memoized per (session, sf): O(n_list×dim)
+    numpy shared by the IVF-flat and IVF-PQ queries."""
+    return memo(
+        spark,
+        sf_dir,
+        "ivf_centroids",
+        lambda: _ivf_centroids(
+            _emb_base_cached(spark, sf_dir), _IVF_NLIST, _IVF_ITERS, seed=4242
+        ),
+    )
+
+
 def _ivf_assign_udf(cents, n_probe: int):
     """pandas UDF: embedding -> the ``n_probe`` nearest cell ids (by cosine
     against unit centroids) — one BLAS matmul per Arrow batch."""
@@ -283,14 +289,7 @@ def similarity_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     once for the verify (house discipline).  Recall is property-tested with
     planted near-duplicates (tests/test_similarity.py)."""
     base = _emb_base_cached(spark, sf_dir)
-    # quantizer fit memoized per (session, sf): O(n_list×dim) numpy — same
-    # house pattern as the tensor model cache (tensor.py _fitted)
-    from paraslice_spark.sources.io import _session_key
-
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _ivf_cache:
-        _ivf_cache[key] = _ivf_centroids(base, _IVF_NLIST, _IVF_ITERS, seed=4242)
-    cents = _ivf_cache[key]
+    cents = _ivf_centroids_cached(spark, sf_dir)
 
     assigned = base.select(
         "vec_id", _ivf_assign_udf(cents, 1)(F.col("emb"))[0].alias("cell")
@@ -331,9 +330,6 @@ _PQ_KS = 16  # codewords per subspace (4-bit codes)
 _PQ_SAMPLE = 512  # training sample for the codebooks
 _PQ_ITERS = 4  # Lloyd sweeps per subspace (driver-local, on the sample)
 _PQ_SHORTLIST = 8 * _TOP_K  # ADC shortlist re-ranked exactly
-
-#: (application id, sf_dir) -> (centroids, codebooks)
-_ivfpq_cache: dict[tuple[str, str], "object"] = {}
 
 
 def _pq_codebooks(base: DataFrame, cents, m: int, ks: int, sample: int, seed: int):
@@ -415,15 +411,13 @@ def similarity_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     base = _emb_base_cached(spark, sf_dir)
-    from paraslice_spark.sources.io import _session_key
-
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _ivfpq_cache:
-        if key not in _ivf_cache:
-            _ivf_cache[key] = _ivf_centroids(base, _IVF_NLIST, _IVF_ITERS, seed=4242)
-        cents = _ivf_cache[key]
-        _ivfpq_cache[key] = (cents, _pq_codebooks(base, cents, _PQ_M, _PQ_KS, _PQ_SAMPLE, seed=99))
-    cents, books = _ivfpq_cache[key]
+    cents = _ivf_centroids_cached(spark, sf_dir)
+    books = memo(
+        spark,
+        sf_dir,
+        "pq_codebooks",
+        lambda: _pq_codebooks(base, cents, _PQ_M, _PQ_KS, _PQ_SAMPLE, seed=99),
+    )
     m, ks, sub = books.shape
 
     enc = _pq_encode_udf(cents, books)(F.col("emb"))
@@ -829,21 +823,17 @@ def _minhash_verified_pairs(
     )
 
 
-#: (session, sf) → eagerly-checkpointed (shingles, signatures) shared by
-#: dedup_minhash_pairs and dedup_minhash_estimate_error — the _knn_cache
-#: pattern (ADVICE r6 persist-hygiene: memoize, don't leak naked persists);
-#: the shingle explode + md5 dictionary + 16-transform agg run once per
-#: session per SF instead of once per consumer per invocation.
-_mh_base_cache: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _minhash_base_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    from paraslice_spark.sources.io import _session_key
+    """Eagerly-checkpointed (shingles, signatures) shared by
+    dedup_minhash_pairs, dedup_minhash_estimate_error and
+    dedup_method_agreement (ADVICE r6 persist-hygiene: memoize, don't leak
+    naked persists): the shingle explode + md5 dictionary + 16-transform
+    agg run once per session per SF instead of once per consumer per
+    invocation."""
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _mh_base_cache:
+    def build() -> tuple[DataFrame, DataFrame]:
         from paraslice_spark.sources.io import scaled_scan_partitions
 
         docs = load_tables(spark, sf_dir)["documents"]
@@ -856,8 +846,9 @@ def _minhash_base_cached(
             docs = docs.repartition(n_part, F.col("doc_id"))
         sh = shingle_docs(docs).localCheckpoint(eager=True)
         sigs = _minhash_signatures(sh, _N_SIG).localCheckpoint(eager=True)
-        _mh_base_cache[key] = (sh, sigs)
-    return _mh_base_cache[key]
+        return sh, sigs
+
+    return memo(spark, sf_dir, "minhash_base", build)
 
 
 @query("dedup_minhash_pairs", oracle=_minhash_oracle())
@@ -876,7 +867,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py.  The r4-regenerated corpus has ~25 real
     J ≥ 0.8 pairs at sf0.01, so the grade is non-vacuous.  Shingles and
     signatures come from the memoized per-(session, sf) checkpoint shared
-    with dedup_minhash_estimate_error (bench.py's shared_builds note)."""
+    with dedup_minhash_estimate_error."""
     sh, sigs = _minhash_base_cached(spark, sf_dir)
     return _minhash_verified_pairs(sh, sigs, 0.8, _N_SIG, _BANDS)
 
@@ -1112,24 +1103,19 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[Data
     return pairs, [g, garr, prefix]
 
 
-#: (application id, sf_dir) -> persisted exact pair table (house memoization
-#: pattern, same as tensor._coords_cache / _ivf_cache: dedup_ngram_jaccard
-#: and dedup_groups share one pair computation per session+sf)
-_ngj_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from paraslice_spark.sources.io import _session_key
+    """Persisted exact pair table: dedup_ngram_jaccard, dedup_groups and
+    the other ngram consumers share one pair computation per session+sf."""
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _ngj_cache:
+    def build() -> DataFrame:
         pairs, temps = _ngram_pairs(spark, sf_dir)
         p = pairs.persist()
         p.count()  # force the pair table NOW so the inputs can release
         for t in temps:  # ADVICE r4: g/garr/prefix otherwise stay pinned
             t.unpersist()  # in executor storage for the whole suite run
-        _ngj_cache[key] = p
-    return _ngj_cache[key]
+        return p
+
+    return memo(spark, sf_dir, "ngram_pairs", build)
 
 
 @query(
@@ -1339,19 +1325,6 @@ def dedup_group_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the executor blocks behind a ``localCheckpoint(eager=True)``
-    DataFrame.  ``df.unpersist()`` is a NO-OP here — the blocks belong to
-    the checkpointed internal RDD, not the cache manager — so we reach the
-    ``LogicalRDD`` node's RDD through the analyzed plan and unpersist it
-    directly (verified: getPersistentRDDs drops to 0).  Best-effort: on any
-    plan-shape surprise the blocks simply age out as before (ADVICE r5)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def _star_components(pairs: DataFrame) -> DataFrame:
     """Large-star/small-star alternation -> (node, lbl) star edges where lbl
     is the component minimum.  Edge set is kept canonical (u < v, distinct)
@@ -1429,22 +1402,14 @@ def _star_components(pairs: DataFrame) -> DataFrame:
     return labels
 
 
-#: (session, sf_dir, scope) -> persisted component-label table.  dedup_groups
-#: and pipeline_curriculum label DIFFERENT pair graphs (curriculum semi-joins
-#: pairs to its quality/lang survivors), hence the scope tag.  Memoizing keeps
-#: executor storage at one tiny (node, lbl) table per scope instead of leaking
-#: a fresh persisted labels table per call (ADVICE r4 — bench calls each
-#: query 3×).
-_labels_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _components_cached(spark: SparkSession, sf_dir: str, scope: str, labels_fn) -> DataFrame:
-    from paraslice_spark.sources.io import _session_key
-
-    key = (_session_key(spark), sf_dir.rstrip("/"), scope)
-    if key not in _labels_cache:
-        _labels_cache[key] = labels_fn()
-    return _labels_cache[key]
+    """Persisted component-label table per (session, sf_dir, scope).
+    dedup_groups and pipeline_curriculum label DIFFERENT pair graphs
+    (curriculum semi-joins pairs to its quality/lang survivors), hence the
+    scope tag.  Memoizing keeps executor storage at one tiny (node, lbl)
+    table per scope instead of leaking a fresh persisted labels table per
+    call (ADVICE r4 — bench calls each query 3×)."""
+    return memo(spark, sf_dir, f"labels:{scope}", labels_fn)
 
 
 def _min_label_components(pairs: DataFrame) -> DataFrame:
@@ -1676,21 +1641,16 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (session, sf) → eagerly-checkpointed (doc_id, simhash) table — the
-#: tokenize + 64-bit-vote stage runs once per session per SF instead of a
-#: naked persist per invocation (the _knn_cache/_mh_base_cache pattern).
-_simhash_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def _simhash_table_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from paraslice_spark.sources.io import _session_key
-
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _simhash_cache:
-        _simhash_cache[key] = _simhash_table(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-    return _simhash_cache[key]
+    """Eagerly-checkpointed (doc_id, simhash) table — the tokenize +
+    64-bit-vote stage runs once per session per SF instead of a naked
+    persist per invocation."""
+    return memo(
+        spark,
+        sf_dir,
+        "simhash_table",
+        lambda: _simhash_table(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def _simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2226,19 +2186,14 @@ def _knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (application id, sf_dir) -> checkpointed k-NN edge table.  The graph is
-#: consumed by TWO declared queries (similarity_knn_graph itself and
-#: graph_pagerank_knn), so the tile matmul runs once per session+sf; the
-#: localCheckpoint also truncates pagerank's iteration lineage at a
-#: materialized base.  Same memoization contract as _ngj_cache.
-_knn_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def _knn_graph_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from paraslice_spark.sources.io import _session_key
+    """Checkpointed k-NN edge table.  The graph is consumed by several
+    declared queries (similarity_knn_graph itself, graph_pagerank_knn and
+    the graph_* family), so the tile matmul runs once per session+sf; the
+    localCheckpoint also truncates pagerank's iteration lineage at a
+    materialized base."""
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _knn_cache:
+    def build() -> DataFrame:
         # The build leaves the tile grid's B² (=64) partitions on an
         # O(n·k)-row edge table; re-key the CHECKPOINT by vec_id at the
         # session's shuffle-partition count (conf-tuned: 32 locally,
@@ -2249,32 +2204,28 @@ def _knn_graph_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         # _knn_uedges_cached layer below; this re-key makes the
         # checkpoint itself conf-sized rather than tile-grid-sized.)
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        _knn_cache[key] = (
+        return (
             _knn_graph(spark, sf_dir)
             .repartition(n_shuffle, F.col("vec_id"))
             .localCheckpoint(eager=True)
         )
-    return _knn_cache[key]
 
-
-#: (session, sf) -> checkpointed CANONICAL UNDIRECTED edge table (u < v,
-#: distinct) of the kNN graph — the second memoization layer (added r12
-#: after the task-latency diagnosis): SIX graph consumers re-derived the
-#: same canonicalize/symmetrize+distinct SHUFFLE from the edge checkpoint
-#: on every materialization, and LPA's 3-round plan compiled it three
-#: times inside one action.  At 100 TB this is also the production
-#: shape — materialize the undirected edge list once, serve every
-#: analytics query from it.
-_knn_uedges_cache: dict[tuple[str, str], DataFrame] = {}
+    return memo(spark, sf_dir, "knn_graph", build)
 
 
 def _knn_uedges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from paraslice_spark.sources.io import _session_key
+    """Checkpointed CANONICAL UNDIRECTED edge table (u < v, distinct) of
+    the kNN graph — the second memoization layer (added r12 after the
+    task-latency diagnosis): SIX graph consumers re-derived the same
+    canonicalize/symmetrize+distinct SHUFFLE from the edge checkpoint on
+    every materialization, and LPA's 3-round plan compiled it three times
+    inside one action.  At 100 TB this is also the production shape —
+    materialize the undirected edge list once, serve every analytics query
+    from it."""
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _knn_uedges_cache:
+    def build() -> DataFrame:
         knn = _knn_graph_cached(spark, sf_dir)
-        _knn_uedges_cache[key] = (
+        return (
             knn.select(
                 F.least("vec_id", "neighbor_id").alias("u"),
                 F.greatest("vec_id", "neighbor_id").alias("v"),
@@ -2282,7 +2233,8 @@ def _knn_uedges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint(eager=True)
         )
-    return _knn_uedges_cache[key]
+
+    return memo(spark, sf_dir, "knn_uedges", build)
 
 
 def _knn_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

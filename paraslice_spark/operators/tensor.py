@@ -38,6 +38,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from paraslice_spark.memo import memo
 from paraslice_spark.registry import query
 from paraslice_spark.sources.io import load_tables
 
@@ -474,31 +475,24 @@ def factors_to_df(spark: SparkSession, factor: np.ndarray, scale: int = 6) -> Da
     return spark.createDataFrame(rows, schema=schema)
 
 
-# (application id, sf_dir) -> cached coords / fitted CPModel; the declared
-# tensor queries share one build + one ALS run per session+sf. Keyed by
-# applicationId (id(spark) is reusable after GC — see sources/io.py).
-_coords_cache: dict[tuple[str, str], DataFrame] = {}
-_model_cache: dict[tuple[str, str], CPModel] = {}
-
-
-def _tensor_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    from paraslice_spark.sources.io import _session_key
-
-    return (_session_key(spark), sf_dir.rstrip("/"))
-
-
+# the declared tensor queries share one coords build + one ALS run per
+# session+sf
 def _coords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _tensor_key(spark, sf_dir)
-    if key not in _coords_cache:
-        _coords_cache[key] = tensor_build_coords(spark, sf_dir).cache()
-    return _coords_cache[key]
+    return memo(
+        spark,
+        sf_dir,
+        "tensor_coords",
+        lambda: tensor_build_coords(spark, sf_dir).cache(),
+    )
 
 
 def _fitted(spark: SparkSession, sf_dir: str) -> CPModel:
-    key = _tensor_key(spark, sf_dir)
-    if key not in _model_cache:
-        _model_cache[key] = parafac(spark, _coords(spark, sf_dir), rank=3, max_iter=10, seed=42)
-    return _model_cache[key]
+    return memo(
+        spark,
+        sf_dir,
+        "cp_model",
+        lambda: parafac(spark, _coords(spark, sf_dir), rank=3, max_iter=10, seed=42),
+    )
 
 
 @query(
@@ -565,16 +559,15 @@ def parafac_cp_als(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_model_cache_dist: dict[tuple[str, str], CPModelDist] = {}
-
-
 def _fitted_dist(spark: SparkSession, sf_dir: str) -> CPModelDist:
-    key = _tensor_key(spark, sf_dir)
-    if key not in _model_cache_dist:
-        _model_cache_dist[key] = parafac_distributed(
+    return memo(
+        spark,
+        sf_dir,
+        "cp_model_dist",
+        lambda: parafac_distributed(
             spark, _coords(spark, sf_dir), rank=3, max_iter=10, seed=42
-        )
-    return _model_cache_dist[key]
+        ),
+    )
 
 
 @query("parafac_cp_als_dist")  # rows-only: float reduction order ~1e-12 variance
@@ -610,7 +603,8 @@ def parafac_factors_a(spark: SparkSession, sf_dir: str) -> DataFrame:
 class TuckerModel:
     """Tucker/HOSVD output: small-mode factors + core driver-local
     (O(J·r2 + K·r3 + r1·r2·r3)); the BIG mode-0 factor stays DISTRIBUTED
-    as an RDD of (ids, A_rows) — it is O(I·r1), data-sized at scale."""
+    as a persisted RDD of (ids, A_rows) — it is O(I·r1), data-sized at
+    scale (the caller unpersists it)."""
 
     a_rows: "object"  # RDD[(ids: np.ndarray, rows: np.ndarray(m, r1))]
     B: np.ndarray  # (J, r2), orthonormal columns
@@ -699,7 +693,13 @@ def tucker_hosvd(
         for ids, y in part:
             yield ids, y @ bW.value  # (m, r1) — A rows for these slices
 
-    a_rdd = y_rdd.mapPartitions(a_rows, preservesPartitioning=True)
+    # the model owns the only persisted RDD: materialize the A rows, then
+    # drop the projection they were computed from (the a_blocks pattern)
+    a_rdd = y_rdd.mapPartitions(a_rows, preservesPartitioning=True).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    a_rdd.count()
+    y_rdd.unpersist()
     core = (np.diag(sigma) @ W.T).reshape(r1, r2, r3)
     slabs.unpersist()
     return TuckerModel(
@@ -714,19 +714,15 @@ def tucker_hosvd(
     )
 
 
-#: (application id, sf_dir) -> fitted Tucker model (house memoization
-#: pattern, same as _model_cache: repeated declared-query runs reuse the
-#: slab build + both aggregate passes)
-_tucker_cache: dict[tuple[str, str], TuckerModel] = {}
-
-
 def _tucker_fitted(spark: SparkSession, sf_dir: str) -> TuckerModel:
-    key = _tensor_key(spark, sf_dir)
-    if key not in _tucker_cache:
-        _tucker_cache[key] = tucker_hosvd(
-            spark, _coords(spark, sf_dir), ranks=(3, 3, 3)
-        )
-    return _tucker_cache[key]
+    """Fitted Tucker model per session+sf: repeated declared-query runs
+    reuse the slab build + both aggregate passes."""
+    return memo(
+        spark,
+        sf_dir,
+        "tucker_model",
+        lambda: tucker_hosvd(spark, _coords(spark, sf_dir), ranks=(3, 3, 3)),
+    )
 
 
 @query("tucker_hosvd_core")  # rows-only: eigh basis signs are LAPACK-internal

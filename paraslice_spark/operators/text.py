@@ -22,6 +22,7 @@ from paraslice_spark.functions.canon import (
     rnd,
     split_label,
 )
+from paraslice_spark.memo import _free_local_checkpoint, memo
 from paraslice_spark.registry import query
 from paraslice_spark.session import vocab_broadcast
 from paraslice_spark.sources.io import load_tables
@@ -698,17 +699,11 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.repartition(1).sortWithinPartitions("train_doc", "bench_doc")
 
 
-#: (application id, sf_dir) -> persisted contamination pair table (house
-#: memoization pattern, same as _ngj_cache/_knn_cache: text_decontaminate
-#: and pipeline_dataset_build share one gram join per session+sf)
-_decon_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def _decontaminate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from paraslice_spark.sources.io import _session_key
+    """Persisted contamination pair table: text_decontaminate and
+    pipeline_dataset_build share one gram join per session+sf."""
 
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key not in _decon_cache:
+    def build() -> DataFrame:
         from paraslice_spark.sources.io import scaled_scan_partitions
 
         d = load_tables(spark, sf_dir)["documents"]
@@ -723,8 +718,9 @@ def _decontaminate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             bench_gram_index(d.where(F.col("source") == "src0")),
         ).persist()
         pairs.count()  # materialize now so the gram inputs can release
-        _decon_cache[key] = pairs
-    return _decon_cache[key]
+        return pairs
+
+    return memo(spark, sf_dir, "decon_pairs", build)
 
 
 def distinct_bigrams() -> "F.Column":
@@ -2301,8 +2297,6 @@ def bpe_train_merges(
             ),
         )
     )
-    from paraslice_spark.operators.similarity import _free_local_checkpoint
-
     merges: list[str] = []
     prev = None  # superseded round's checkpoint, released after the next one
     for _ in range(n_merges):

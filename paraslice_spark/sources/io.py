@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paraslice_spark.memo import memo
 from paraslice_spark.session import ensure_session_confs
 
 TABLES = (
@@ -27,18 +28,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# (application id, sf_dir) -> {table: DataFrame}. Keyed by applicationId,
-# NOT id(spark): CPython reuses addresses, so an id() key can hand back
-# DataFrames bound to a stopped SparkContext after a session restart.
-_cache: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:
-        return str(id(spark))
 
 
 def scaled_scan_partitions(
@@ -110,20 +99,20 @@ def load_tables(
 
     Registers each as a temp view (S5) so ``spark.sql`` twins work.
     """
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key in _cache:
-        return _cache[key]
-    ensure_session_confs(spark)
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-        if name == "events":
-            df = _repair_events(df)
-        out[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    _cache[key] = out
-    return out
+
+    def build() -> dict[str, DataFrame]:
+        ensure_session_confs(spark)
+        out: dict[str, DataFrame] = {}
+        for name in TABLES:
+            df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+            if name == "events":
+                df = _repair_events(df)
+            out[name] = df
+            if register_views:
+                df.createOrReplaceTempView(name)
+        return out
+
+    return memo(spark, sf_dir, "tables", build)
 
 
 def spread_scan(df: DataFrame) -> DataFrame:

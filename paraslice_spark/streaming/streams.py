@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from paraslice_spark.functions.canon import md5_u32_sql
+from paraslice_spark.memo import memo
 from paraslice_spark.registry import query
 
 #: events schema with ts as raw ns-epoch longs (synthetic replay batches and
@@ -897,11 +898,6 @@ def stream_countmin_counters(events: DataFrame) -> DataFrame:
 #: whole replay stays in the local job-floor band
 SSWR_BATCHES = 6
 
-#: (application id, sf_dir) -> checkpointed result of the declared replay —
-#: the stream executes ONCE per session+sf (the _replay_wm_cached contract);
-#: the driver's count/collect actions replay the checkpoint, not the stream
-_sswr_cache: dict = {}
-
 
 @query("stream_session_watermark_replay")
 def stream_session_watermark_replay(
@@ -943,7 +939,7 @@ def stream_session_watermark_replay(
     return _run_replay(
         spark,
         sf_dir,
-        _sswr_cache,
+        "replay:sswr",
         lambda stream: watermarked_sessions(
             stream, watermark="2 hours", gap="12 hours"
         ),
@@ -1023,17 +1019,19 @@ def _bytes_conf(spark, key: str, default: int) -> int:
 
 
 def _run_replay(
-    spark, sf_dir, cache, agg_of_stream, result_of_sink, output_mode="append",
-    sink="memory",
+    spark, sf_dir, memo_name, agg_of_stream, result_of_sink,
+    output_mode="append", sink="memory",
 ):
     """Shared declared-replay harness: write one parquet file per
     non-empty arrival bucket (repartition-by-bucket → exactly one file),
     replay one-file-per-trigger in pinned mtime order through the given
     streaming agg, summarize the sink plus the engine's
     numRowsDroppedByWatermark into a checkpointed result, memoized per
-    (session, sf).  ``output_mode`` is the sink mode under test (append
-    emits closed windows once; update appends a snapshot row per changed
-    window per batch — the ST8 surface stream_update_mode_replay prices).
+    (session, sf) under ``memo_name`` (the stream executes ONCE; the
+    driver's actions replay the checkpoint).  ``output_mode`` is the sink
+    mode under test (append emits closed windows once; update appends a
+    snapshot row per changed window per batch — the ST8 surface
+    stream_update_mode_replay prices).
     ``sink`` chooses the capture mechanism: "memory" (the in-memory
     table the tumbling trilogy uses) or "snapshot" — foreachBatch
     overwriting one parquet dir per trigger, so the final dir is the
@@ -1049,118 +1047,113 @@ def _run_replay(
     import tempfile
     import uuid
 
-    from paraslice_spark.sources.io import _session_key
-
-    key = (_session_key(spark), sf_dir.rstrip("/"))
-    if key in cache:
-        return cache[key]
-    stage = tempfile.mkdtemp(prefix="paraslice_replay_stage_")
-    replay = tempfile.mkdtemp(prefix="paraslice_replay_dir_")
-    name = "replay_" + uuid.uuid4().hex[:12]
-    snapdir = None
-    try:
-        (
-            replay_batch_frame(spark, sf_dir)
-            .repartition(SSWR_BATCHES, F.col("b"))
-            .write.partitionBy("b")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        # The oracle's dense batch-index/watermark model requires each
-        # bucket to replay as exactly ONE micro-batch read as exactly ONE
-        # input partition.  Both contracts fail loudly here (never via
-        # `assert`, which vanishes under python -O — ADVICE r11 #2/#3):
-        # multiple part files per bucket would replay as extra batches;
-        # a file at/above Spark's split threshold
-        # min(files.maxPartitionBytes, files.openCostInBytes) could split
-        # across input partitions, making same-window rows partial-agg
-        # separately and the engine's numRowsDroppedByWatermark exceed the
-        # COUNT(DISTINCT (batch, window)) model.
-        split_floor = min(
-            _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20),
-            _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20),
-        )
-        for i in range(SSWR_BATCHES):
-            parts = sorted(glob.glob(f"{stage}/b={i}/part-*.parquet"))
-            if not parts:  # an arrival bucket can be empty at tiny SFs
-                continue
-            if len(parts) != 1:  # repartition-by-b contract
-                raise RuntimeError(
-                    f"replay bucket b={i} staged {len(parts)} parquet files "
-                    f"(expected exactly 1 from repartition-by-b): {parts}"
-                )
-            size = os.path.getsize(parts[0])
-            if size >= split_floor:
-                raise RuntimeError(
-                    f"replay batch file b={i} is {size} bytes >= the "
-                    f"input-split floor {split_floor} "
-                    "(min of spark.sql.files.maxPartitionBytes / "
-                    "openCostInBytes) — it could split across input "
-                    "partitions and break the replay oracle's "
-                    "one-partition-per-batch drop-counter model"
-                )
-            dst = f"{replay}/batch-{i:03d}.parquet"
-            shutil.move(parts[0], dst)
-            t = 1_700_000_000 + i * 60
-            os.utime(dst, (t, t))
-        stream = events_file_stream(spark, replay, max_files_per_trigger=1)
-        if sink == "snapshot":
-            snapdir = tempfile.mkdtemp(prefix="paraslice_replay_snap_")
-            snap = os.path.join(snapdir, "snap")
-
-            def _overwrite_snapshot(df, _epoch_id, _snap=snap):
-                df.write.mode("overwrite").parquet(_snap)
-
-            writer = agg_of_stream(stream).writeStream.foreachBatch(
-                _overwrite_snapshot
-            )
-        else:
-            writer = (
-                agg_of_stream(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-            )
-        q = writer.outputMode(output_mode).trigger(availableNow=True).start()
-        q.awaitTermination()
-        dropped = sum(
-            so.get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            for so in (p["stateOperators"] or [])
-        )
-        if sink == "snapshot" and not os.path.exists(snap):
-            # foreachBatch never fired (ADVICE r13): zero triggers means an
-            # empty replayed source — surface the contract violation
-            # explicitly instead of an opaque path-missing AnalysisException
-            raise RuntimeError(
-                "replay snapshot sink never materialized: the replayed "
-                "source produced zero triggers (empty events table?)"
-            )
-        emitted = (
-            spark.read.parquet(snap) if sink == "snapshot"
-            else spark.table(name)
-        )
-        res = result_of_sink(emitted, dropped).localCheckpoint(
-            eager=True  # seal before the dirs vanish
-        )
-    finally:
+    def build():
+        stage = tempfile.mkdtemp(prefix="paraslice_replay_stage_")
+        replay = tempfile.mkdtemp(prefix="paraslice_replay_dir_")
+        name = "replay_" + uuid.uuid4().hex[:12]
+        snapdir = None
         try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass  # sink view never materialized (stream failed early)
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(replay, ignore_errors=True)
-        if sink == "snapshot" and snapdir is not None:
-            shutil.rmtree(snapdir, ignore_errors=True)
-    cache[key] = res
-    return res
+            (
+                replay_batch_frame(spark, sf_dir)
+                .repartition(SSWR_BATCHES, F.col("b"))
+                .write.partitionBy("b")
+                .mode("overwrite")
+                .parquet(stage)
+            )
+            # The oracle's dense batch-index/watermark model requires each
+            # bucket to replay as exactly ONE micro-batch read as exactly ONE
+            # input partition.  Both contracts fail loudly here (never via
+            # `assert`, which vanishes under python -O — ADVICE r11 #2/#3):
+            # multiple part files per bucket would replay as extra batches;
+            # a file at/above Spark's split threshold
+            # min(files.maxPartitionBytes, files.openCostInBytes) could split
+            # across input partitions, making same-window rows partial-agg
+            # separately and the engine's numRowsDroppedByWatermark exceed the
+            # COUNT(DISTINCT (batch, window)) model.
+            split_floor = min(
+                _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20),
+                _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20),
+            )
+            for i in range(SSWR_BATCHES):
+                parts = sorted(glob.glob(f"{stage}/b={i}/part-*.parquet"))
+                if not parts:  # an arrival bucket can be empty at tiny SFs
+                    continue
+                if len(parts) != 1:  # repartition-by-b contract
+                    raise RuntimeError(
+                        f"replay bucket b={i} staged {len(parts)} parquet files "
+                        f"(expected exactly 1 from repartition-by-b): {parts}"
+                    )
+                size = os.path.getsize(parts[0])
+                if size >= split_floor:
+                    raise RuntimeError(
+                        f"replay batch file b={i} is {size} bytes >= the "
+                        f"input-split floor {split_floor} "
+                        "(min of spark.sql.files.maxPartitionBytes / "
+                        "openCostInBytes) — it could split across input "
+                        "partitions and break the replay oracle's "
+                        "one-partition-per-batch drop-counter model"
+                    )
+                dst = f"{replay}/batch-{i:03d}.parquet"
+                shutil.move(parts[0], dst)
+                t = 1_700_000_000 + i * 60
+                os.utime(dst, (t, t))
+            stream = events_file_stream(spark, replay, max_files_per_trigger=1)
+            if sink == "snapshot":
+                snapdir = tempfile.mkdtemp(prefix="paraslice_replay_snap_")
+                snap = os.path.join(snapdir, "snap")
+
+                def _overwrite_snapshot(df, _epoch_id, _snap=snap):
+                    df.write.mode("overwrite").parquet(_snap)
+
+                writer = agg_of_stream(stream).writeStream.foreachBatch(
+                    _overwrite_snapshot
+                )
+            else:
+                writer = (
+                    agg_of_stream(stream)
+                    .writeStream.format("memory")
+                    .queryName(name)
+                )
+            q = writer.outputMode(output_mode).trigger(availableNow=True).start()
+            q.awaitTermination()
+            dropped = sum(
+                so.get("numRowsDroppedByWatermark", 0)
+                for p in q.recentProgress
+                for so in (p["stateOperators"] or [])
+            )
+            if sink == "snapshot" and not os.path.exists(snap):
+                # foreachBatch never fired (ADVICE r13): zero triggers means an
+                # empty replayed source — surface the contract violation
+                # explicitly instead of an opaque path-missing AnalysisException
+                raise RuntimeError(
+                    "replay snapshot sink never materialized: the replayed "
+                    "source produced zero triggers (empty events table?)"
+                )
+            emitted = (
+                spark.read.parquet(snap) if sink == "snapshot"
+                else spark.table(name)
+            )
+            res = result_of_sink(emitted, dropped).localCheckpoint(
+                eager=True  # seal before the dirs vanish
+            )
+        finally:
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:
+                pass  # sink view never materialized (stream failed early)
+            shutil.rmtree(stage, ignore_errors=True)
+            shutil.rmtree(replay, ignore_errors=True)
+            if sink == "snapshot" and snapdir is not None:
+                shutil.rmtree(snapdir, ignore_errors=True)
+        return res
+
+    return memo(spark, sf_dir, memo_name, build)
 
 
 #: watermark delay of the DECLARED tumbling replay, in engine milliseconds
 #: (Spark parses "2 hours" to exactly this; the oracle must use the same
 #: unit because the engine floors event-time stats to ms)
 SSWR_DELAY_MS = 7_200_000
-
-_stwr_cache: dict = {}
 
 
 def _stwr_oracle() -> str:
@@ -1269,7 +1262,7 @@ def stream_tumbling_watermark_replay(
     return _run_replay(
         spark,
         sf_dir,
-        _stwr_cache,
+        "replay:stwr",
         _tumbling_micros_agg,
         _stwr_summarize,
     )
@@ -1304,9 +1297,6 @@ def _stwr_summarize(sink: DataFrame, dropped: int) -> DataFrame:
         .repartition(1)
         .sortWithinPartitions("hr")
     )
-
-
-_sumr_cache: dict = {}
 
 
 def _sumr_oracle() -> str:
@@ -1402,7 +1392,7 @@ def stream_update_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_replay(
         spark,
         sf_dir,
-        _sumr_cache,
+        "replay:sumr",
         _tumbling_micros_agg,
         _sumr_summarize,
         output_mode="update",
@@ -1426,9 +1416,6 @@ def _sumr_summarize(sink: DataFrame, dropped: int) -> DataFrame:
         .repartition(1)
         .sortWithinPartitions("hr")
     )
-
-
-_scmr_cache: dict = {}
 
 
 @query(
@@ -1474,7 +1461,7 @@ def stream_complete_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_replay(
         spark,
         sf_dir,
-        _scmr_cache,
+        "replay:scmr",
         _tumbling_micros_agg,
         _stwr_summarize,  # same (hr, n, vmic, batches, drops) ledger shape
         output_mode="complete",
@@ -1485,8 +1472,6 @@ def stream_complete_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: "12 hours" to exactly this; sessionization merges at FULL µs event-time
 #: precision — only the watermark comparison is ms-floored)
 SSCR_GAP_US = 43_200_000_000
-
-_sscr_cache: dict = {}
 
 
 def _sscr_oracle() -> str:
@@ -1601,7 +1586,7 @@ def stream_session_complete_replay(spark: SparkSession, sf_dir: str) -> DataFram
     return _run_replay(
         spark,
         sf_dir,
-        _sscr_cache,
+        "replay:sscr",
         lambda stream: watermarked_sessions(
             stream, watermark="2 hours", gap="12 hours"
         ),

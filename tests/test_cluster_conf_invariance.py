@@ -16,6 +16,7 @@ import pytest
 
 import paraslice_spark.operators  # noqa: F401
 from paraslice_spark.registry import QUERIES
+from paraslice_spark.sources.io import load_tables
 from tests.conftest import SF_SMALL
 from tests.oracle_harness import canonical_rows
 
@@ -121,48 +122,14 @@ def _clear_memo_caches() -> None:
     """Memoized per-(session, sf) bases would otherwise freeze blocks built
     under the FIRST conf regime, so the clustered run would replay frozen
     data instead of exercising its build stage under cluster confs —
-    exactly the 'works under my confs' blind spot this pack guards."""
-    from paraslice_spark.operators import (
-        cdc,
-        relational,
-        reshape,
-        similarity,
-        tensor,
-    )
-    from paraslice_spark.streaming import streams
+    exactly the 'works under my confs' blind spot this pack guards.
 
-    # release the dropped frames' executor blocks (ADVICE r7) — clearing the
-    # dict alone leaves eager-checkpoint storage orphaned until Python GC
-    for cache in (
-        cdc._cdc_log_cache,
-        similarity._simhash_cache,
-        similarity._mh_base_cache,  # values are (shingles, signatures) tuples
-        similarity._emb_base_cache,
-        similarity._knn_cache,
-        similarity._knn_uedges_cache,
-        relational._col_hist_cache,
-        reshape._replay_wm_cache,
-        tensor._coords_cache,  # .cache()d, not checkpointed → unpersist path
-        streams._sswr_cache,   # checkpointed replay ledgers: the stream
-        streams._stwr_cache,   # itself must re-execute under cluster confs
-        streams._sumr_cache,
-        streams._scmr_cache,
-        streams._sscr_cache,
-    ):
-        for v in cache.values():
-            for df in v if isinstance(v, tuple) else (v,):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-                similarity._free_local_checkpoint(df)
-        cache.clear()
-    # fitted tensor models hold no DataFrame; only the distributed CP
-    # model keeps executor blocks (its persisted a_blocks)
-    for model in tensor._model_cache_dist.values():
-        model.a_blocks.unpersist()
-    for cache in (tensor._model_cache, tensor._model_cache_dist, tensor._tucker_cache):
-        cache.clear()
+    This also drops the ``tables`` memo, whose build runs
+    ``ensure_session_confs`` — on a local master that resets 200 shuffle
+    partitions to 32 — so reload the tables before setting cluster confs."""
+    from paraslice_spark import memo
+
+    memo.clear_all()
 
 
 #: queries whose pipeline rides a memoized localCheckpoint base — both
@@ -186,6 +153,9 @@ def test_results_invariant_under_cluster_confs(spark, name):
     if name in _MEMOIZED:
         _clear_memo_caches()
     base = canonical_rows(QUERIES[name](spark, SF_SMALL).toPandas())
+    if name in _MEMOIZED:
+        _clear_memo_caches()
+        load_tables(spark, SF_SMALL)
     conf = spark.conf
     saved: dict[str, str | None] = {}
     for k, v in _CLUSTER_CONFS.items():
@@ -195,9 +165,9 @@ def test_results_invariant_under_cluster_confs(spark, name):
             saved[k] = None
         conf.set(k, v)
     try:
-        if name in _MEMOIZED:
-            _clear_memo_caches()
         clustered = canonical_rows(QUERIES[name](spark, SF_SMALL).toPandas())
+        # no rebuild inside the run may reset the cluster regime
+        assert conf.get("spark.sql.shuffle.partitions") == "200"
     finally:
         for k, v in saved.items():
             if v is None:

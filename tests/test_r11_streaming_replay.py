@@ -15,9 +15,9 @@ from tests.conftest import SF_SMALL
 
 
 def _run_fresh(spark):
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
 
-    streams._sswr_cache.clear()
+    memo.clear_all("replay:sswr")
     return [
         tuple(r)
         for r in QUERIES["stream_session_watermark_replay"](
@@ -37,9 +37,9 @@ def test_replay_is_deterministic_across_executions(spark):
 
 
 def test_replay_memoized_within_session(spark):
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
 
-    streams._sswr_cache.clear()
+    memo.clear_all("replay:sswr")
     d1 = QUERIES["stream_session_watermark_replay"](spark, SF_SMALL)
     d2 = QUERIES["stream_session_watermark_replay"](spark, SF_SMALL)
     assert d1 is d2  # the stream executed once; actions replay the ckpt
@@ -156,7 +156,7 @@ def test_tumbling_replay_engine_matches_python(spark):
     drop combining) re-derived with no shared code."""
     import duckdb
 
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
 
     con = duckdb.connect()
     rows = con.execute(
@@ -164,7 +164,7 @@ def test_tumbling_replay_engine_matches_python(spark):
     ).fetchall()
     con.close()
     want = tumbling_replay_python(rows)
-    streams._stwr_cache.clear()
+    memo.clear_all("replay:stwr")
     got = [
         tuple(r)
         for r in QUERIES["stream_tumbling_watermark_replay"](
@@ -188,9 +188,8 @@ def test_tumbling_replay_engine_matches_oracle_on_random_tables(spark, tmp_path)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from paraslice_spark import memo
     from paraslice_spark.registry import ORACLES
-    from paraslice_spark.sources import io as pio
-    from paraslice_spark.streaming import streams
     from tests.oracle_harness import run_compare
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
@@ -224,7 +223,7 @@ def test_tumbling_replay_engine_matches_oracle_on_random_tables(spark, tmp_path)
         for t in ("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings"):
             os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
-        streams._stwr_cache.clear()
+        memo.clear_all("replay:stwr")
         problems = run_compare(
             spark,
             QUERIES["stream_tumbling_watermark_replay"],
@@ -240,7 +239,7 @@ def test_tumbling_replay_engine_matches_oracle_on_random_tables(spark, tmp_path)
         ]
         assert got == tumbling_replay_python(rows), seed
         # keep the shared loader cache from pinning the fuzz dir's tables
-        pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+        memo.forget(spark, str(d))
 
 
 def test_tumbling_replay_engine_matches_oracle_on_degenerate_geometry(
@@ -259,9 +258,8 @@ def test_tumbling_replay_engine_matches_oracle_on_degenerate_geometry(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from paraslice_spark import memo
     from paraslice_spark.registry import ORACLES
-    from paraslice_spark.sources import io as pio
-    from paraslice_spark.streaming import streams
     from tests.oracle_harness import run_compare
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
@@ -293,7 +291,7 @@ def test_tumbling_replay_engine_matches_oracle_on_degenerate_geometry(
         for t in ("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings"):
             os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
-        streams._stwr_cache.clear()
+        memo.clear_all("replay:stwr")
         problems = run_compare(
             spark,
             QUERIES["stream_tumbling_watermark_replay"],
@@ -308,7 +306,7 @@ def test_tumbling_replay_engine_matches_oracle_on_degenerate_geometry(
             ).collect()
         ]
         assert got == tumbling_replay_python(rows), tag
-        pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+        memo.forget(spark, str(d))
 
 
 def test_session_replay_properties_on_random_tables(spark, tmp_path):
@@ -324,9 +322,8 @@ def test_session_replay_properties_on_random_tables(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from paraslice_spark.sources import io as pio
+    from paraslice_spark import memo
     from paraslice_spark.sources.io import load_tables
-    from paraslice_spark.streaming import streams
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
     for seed in range(2):
@@ -359,7 +356,7 @@ def test_session_replay_properties_on_random_tables(spark, tmp_path):
             os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
 
         def run():
-            streams._sswr_cache.clear()
+            memo.clear_all("replay:sswr")
             return [
                 tuple(r)
                 for r in QUERIES["stream_session_watermark_replay"](
@@ -385,4 +382,4 @@ def test_session_replay_properties_on_random_tables(spark, tmp_path):
         assert emitted_sessions <= n_batch + dropped, (
             seed, emitted_sessions, n_batch, dropped,
         )
-        pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+        memo.forget(spark, str(d))

@@ -80,9 +80,9 @@ def _fixture_rows():
 
 
 def _run_fresh(spark, sf_dir):
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
 
-    streams._sumr_cache.clear()
+    memo.clear_all("replay:sumr")
     return [
         tuple(r)
         for r in QUERIES["stream_update_mode_replay"](spark, sf_dir).collect()
@@ -106,10 +106,9 @@ def test_update_replay_consistent_with_append_twin(spark):
     value sum (update's last snapshot is the closed aggregate), the
     same engine drop counter, and update must additionally carry the
     open tail append withholds."""
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
 
-    streams._sumr_cache.clear()
-    streams._stwr_cache.clear()
+    memo.clear_all("replay:sumr", "replay:stwr")
     upd = {
         r[0]: (r[2], r[3], r[5])
         for r in QUERIES["stream_update_mode_replay"](spark, SF_SMALL).collect()
@@ -137,8 +136,7 @@ def test_update_replay_engine_matches_oracle_on_random_tables(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from paraslice_spark.sources import io as pio
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
     from tests.oracle_harness import run_compare
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
@@ -170,7 +168,7 @@ def test_update_replay_engine_matches_oracle_on_random_tables(spark, tmp_path):
         for t in ("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings"):
             os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
-        streams._sumr_cache.clear()
+        memo.clear_all("replay:sumr")
         problems = run_compare(
             spark,
             QUERIES["stream_update_mode_replay"],
@@ -185,7 +183,7 @@ def test_update_replay_engine_matches_oracle_on_random_tables(spark, tmp_path):
             ).collect()
         ]
         assert got == update_replay_python(rows), seed
-        pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+        memo.forget(spark, str(d))
 
 
 def test_update_replay_engine_on_degenerate_geometry(spark, tmp_path):
@@ -199,8 +197,7 @@ def test_update_replay_engine_on_degenerate_geometry(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from paraslice_spark.sources import io as pio
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
     from tests.oracle_harness import run_compare
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
@@ -227,7 +224,7 @@ def test_update_replay_engine_on_degenerate_geometry(spark, tmp_path):
     for t in ("region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "documents", "embeddings"):
         os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
-    streams._sumr_cache.clear()
+    memo.clear_all("replay:sumr")
     problems = run_compare(
         spark,
         QUERIES["stream_update_mode_replay"],
@@ -241,7 +238,7 @@ def test_update_replay_engine_on_degenerate_geometry(spark, tmp_path):
     ]
     assert got == update_replay_python(rows)
     assert len(got) == 3 and all(r[5] == 0 for r in got)
-    pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+    memo.forget(spark, str(d))
 
 
 def test_gram_sweep_n2_arm_equals_production_decontaminate(spark):
@@ -278,10 +275,10 @@ def test_complete_replay_trilogy_laws(spark):
     the watermark-gated subset of both."""
     from pyspark.sql import functions as F
 
+    from paraslice_spark import memo
     from paraslice_spark.sources.io import load_tables
-    from paraslice_spark.streaming import streams
 
-    streams._scmr_cache.clear()
+    memo.clear_all("replay:scmr")
     comp = {
         r[0]: (r[1], r[2], r[4])
         for r in QUERIES["stream_complete_mode_replay"](
@@ -330,8 +327,7 @@ def test_complete_replay_engine_matches_oracle_on_random_tables(spark, tmp_path)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from paraslice_spark.sources import io as pio
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
     from tests.oracle_harness import run_compare
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
@@ -363,7 +359,7 @@ def test_complete_replay_engine_matches_oracle_on_random_tables(spark, tmp_path)
         for t in ("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings"):
             os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
-        streams._scmr_cache.clear()
+        memo.clear_all("replay:scmr")
         problems = run_compare(
             spark,
             QUERIES["stream_complete_mode_replay"],
@@ -371,4 +367,4 @@ def test_complete_replay_engine_matches_oracle_on_random_tables(spark, tmp_path)
             str(d),
         )
         assert not problems, (seed, problems)
-        pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+        memo.forget(spark, str(d))

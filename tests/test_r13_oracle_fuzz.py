@@ -604,8 +604,8 @@ def test_window_distribution_spark_small_n(spark, tmp_path, n):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from paraslice_spark import memo
     from paraslice_spark.registry import QUERIES
-    from paraslice_spark.sources import io as pio
     from tests.conftest import SF_SMALL
     from tests.oracle_harness import run_compare
 
@@ -630,4 +630,4 @@ def test_window_distribution_spark_small_n(spark, tmp_path, n):
         str(d),
     )
     assert not problems, (n, problems)
-    pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+    memo.forget(spark, str(d))

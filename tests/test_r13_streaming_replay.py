@@ -96,9 +96,9 @@ def _fixture_rows():
 
 
 def _run_fresh(spark, sf_dir):
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
 
-    streams._sscr_cache.clear()
+    memo.clear_all("replay:sscr")
     return [
         tuple(r)
         for r in QUERIES["stream_session_complete_replay"](
@@ -131,10 +131,9 @@ def test_session_complete_consistent_with_append_twin(spark):
     SAME engine drops; append emits only watermark-closed sessions, so
     its event total is bounded by complete's, and complete's event
     total is exactly the surviving rows."""
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
 
-    streams._sscr_cache.clear()
-    streams._sswr_cache.clear()
+    memo.clear_all("replay:sscr", "replay:sswr")
     comp = [
         tuple(r)
         for r in QUERIES["stream_session_complete_replay"](
@@ -169,8 +168,7 @@ def test_session_complete_engine_matches_oracle_on_random_tables(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from paraslice_spark.sources import io as pio
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
     from tests.oracle_harness import run_compare
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
@@ -202,7 +200,7 @@ def test_session_complete_engine_matches_oracle_on_random_tables(
         for t in ("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "documents", "embeddings"):
             os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
-        streams._sscr_cache.clear()
+        memo.clear_all("replay:sscr")
         problems = run_compare(
             spark,
             QUERIES["stream_session_complete_replay"],
@@ -217,7 +215,7 @@ def test_session_complete_engine_matches_oracle_on_random_tables(
             ).collect()
         ]
         assert got == session_complete_replay_python(rows), seed
-        pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+        memo.forget(spark, str(d))
 
 
 def test_session_complete_engine_on_degenerate_geometry(spark, tmp_path):
@@ -230,8 +228,7 @@ def test_session_complete_engine_on_degenerate_geometry(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from paraslice_spark.sources import io as pio
-    from paraslice_spark.streaming import streams
+    from paraslice_spark import memo
     from tests.oracle_harness import run_compare
 
     base_ns = int(datetime.datetime(2024, 3, 1).timestamp()) * 10**9
@@ -258,7 +255,7 @@ def test_session_complete_engine_on_degenerate_geometry(spark, tmp_path):
     for t in ("region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "documents", "embeddings"):
         os.symlink(f"{SF_SMALL}/{t}.parquet", str(d / f"{t}.parquet"))
-    streams._sscr_cache.clear()
+    memo.clear_all("replay:sscr")
     problems = run_compare(
         spark,
         QUERIES["stream_session_complete_replay"],
@@ -274,7 +271,7 @@ def test_session_complete_engine_on_degenerate_geometry(spark, tmp_path):
     ]
     assert got == session_complete_replay_python(rows)
     assert sum(r[1] for r in got) == 2 and all(r[5] == 0 for r in got)
-    pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+    memo.forget(spark, str(d))
 
 
 def test_zero_trigger_replay_raises_contract_error(spark, tmp_path):
@@ -288,7 +285,7 @@ def test_zero_trigger_replay_raises_contract_error(spark, tmp_path):
     import pyarrow.parquet as pq
     import pytest as _pytest
 
-    from paraslice_spark.sources import io as pio
+    from paraslice_spark import memo
 
     d = tmp_path / "empty_events"
     os.makedirs(d)
@@ -301,9 +298,4 @@ def test_zero_trigger_replay_raises_contract_error(spark, tmp_path):
         with _pytest.raises(RuntimeError, match="zero triggers"):
             QUERIES["stream_session_complete_replay"](spark, str(d))
     finally:
-        from paraslice_spark.streaming import streams
-
-        streams._sscr_cache.pop(
-            (pio._session_key(spark), str(d).rstrip("/")), None
-        )
-        pio._cache.pop((pio._session_key(spark), str(d).rstrip("/")), None)
+        memo.forget(spark, str(d))

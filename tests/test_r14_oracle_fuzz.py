@@ -749,9 +749,9 @@ def _tiny_fixture(tmp_path, name, rewrite):
 
 
 def _drop_cache(spark, d):
-    from paraslice_spark.sources import io as pio
+    from paraslice_spark import memo
 
-    pio._cache.pop((pio._session_key(spark), d.rstrip("/")), None)
+    memo.forget(spark, d)
 
 
 @pytest.mark.parametrize("n", [1, 2, 5])

@@ -500,12 +500,9 @@ def _tiny_fixture(tmp_path, name, rewrite):
 
 
 def _drop_caches(spark, d):
-    from paraslice_spark.operators import cdc
-    from paraslice_spark.sources import io as pio
+    from paraslice_spark import memo
 
-    key = (pio._session_key(spark), d.rstrip("/"))
-    pio._cache.pop(key, None)
-    cdc._cdc_log_cache.pop(key, None)
+    memo.forget(spark, d)
 
 
 @pytest.mark.parametrize("n", [1, 2, 7])

@@ -286,6 +286,24 @@ def test_tucker_energy_monotone_in_rank(spark):
     assert energies[2] >= 0.999 * total
 
 
+def test_tucker_model_owns_its_persisted_rdd(spark):
+    """The fitted model's a_rows is the only RDD the fit leaves persisted,
+    so forgetting its memo returns executor storage to its size before the
+    fit."""
+    from paraslice_spark import memo
+    from paraslice_spark.operators.tensor import tucker_hosvd
+
+    jsc = spark.sparkContext._jsc
+    coords = _planted_coords(spark, seed=17)
+    before = set(jsc.getPersistentRDDs())
+    m = memo.memo(
+        spark, SF_SMALL, "tucker_leak_test", lambda: tucker_hosvd(spark, coords)
+    )
+    assert set(jsc.getPersistentRDDs()) - before == {m.a_rows.id()}
+    memo.forget(spark, SF_SMALL, "tucker_leak_test")
+    assert set(jsc.getPersistentRDDs()) - before == set()
+
+
 def test_tucker_declared_query_runs(spark):
     from paraslice_spark.registry import QUERIES
 
