@@ -16,6 +16,9 @@ Design rules (SURVEY §4, §7.3):
   :mod:`paraslice_spark.registry`.
 """
 
+from paraslice_spark import pyworker
 from paraslice_spark.registry import QUERIES, ORACLES, query
+
+pyworker.install()
 
 __all__ = ["QUERIES", "ORACLES", "query"]

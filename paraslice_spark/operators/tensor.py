@@ -27,11 +27,22 @@ Spark-first:
 100 TB discipline (SURVEY §2.5): raw tensor data stays partitioned for the
 whole run; only factors (O(max_dim×R)) and Grams (O(R²)) cross the
 cluster/driver boundary; stale broadcasts are unpersisted every sweep.
+
+Python-task floor: each task of these short stages first runs PySpark's
+worker set-up, whose ``importlib.invalidate_caches()`` re-reads every zip
+archive on the worker's path on CPython < 3.13 (0.16-0.43 s per task on
+PySpark 4.1.2 / CPython 3.11.7, 4-core box).
+:mod:`paraslice_spark.pyworker` skips the re-read for unchanged archives
+once a worker has imported the package, so every CP-ALS stage ships code
+pickled by reference: the slab-build kernels are module-level functions
+bound with ``functools.partial``, and the sweep closures call
+:func:`_a_rows`.  Unpickling either imports the package.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 from pyspark import StorageLevel
@@ -137,6 +148,54 @@ def tensor_shape(coords: DataFrame) -> tuple[int, int, int]:
     return int(row["si"]), int(row["sj"]), int(row["sk"])
 
 
+def _to_slices(batches, sj: int, sk: int):
+    """T2 Arrow kernel: scatter one partition's coordinate batches into a
+    dense slab, emitted as ``(id, payload)`` batches of ≤64 slices."""
+    import pyarrow as pa
+
+    parts: dict[str, list[np.ndarray]] = {"i": [], "j": [], "k": [], "v": []}
+    for b in batches:
+        for name in parts:
+            parts[name].append(
+                b.column(name).to_numpy(zero_copy_only=False)
+            )
+    if not parts["i"]:
+        return
+    i = np.concatenate(parts["i"])
+    j = np.concatenate(parts["j"])
+    k = np.concatenate(parts["k"])
+    v = np.concatenate(parts["v"])
+    ids, inv = np.unique(i, return_inverse=True)
+    slab = np.zeros((len(ids), sj, sk), dtype=np.float64)
+    slab[inv, j, k] = v  # coords are unique per (i,j,k) — exact scatter
+    for lo in range(0, len(ids), 64):
+        hi = min(lo + 64, len(ids))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids[lo:hi], type=pa.int64()),
+                pa.array(
+                    [slab[t].tobytes() for t in range(lo, hi)],
+                    type=pa.binary(),
+                ),
+            ],
+            names=["id", "payload"],
+        )
+
+
+def _reassemble(rows, sj: int, sk: int):
+    """T2 RDD kernel: stack one partition's ``(id, payload)`` rows into the
+    batched slab ``(ids, X)``."""
+    ids: list[int] = []
+    mats: list[np.ndarray] = []
+    for r in rows:
+        ids.append(r[0])
+        mats.append(
+            np.frombuffer(bytes(r[1]), dtype=np.float64).reshape(sj, sk)
+        )
+    if ids:
+        yield np.asarray(ids, dtype=np.int64), np.stack(mats)
+
+
 def build_slices(
     coords: DataFrame,
     shape: tuple[int, int, int],
@@ -163,59 +222,16 @@ def build_slices(
     so no RecordBatch approaches Arrow's 2 GiB int32-offset binary limit.
     """
     _, sj, sk = shape
-
-    def to_slices(batches):
-        import pyarrow as pa
-
-        parts: dict[str, list[np.ndarray]] = {"i": [], "j": [], "k": [], "v": []}
-        for b in batches:
-            for name in parts:
-                parts[name].append(
-                    b.column(name).to_numpy(zero_copy_only=False)
-                )
-        if not parts["i"]:
-            return
-        i = np.concatenate(parts["i"])
-        j = np.concatenate(parts["j"])
-        k = np.concatenate(parts["k"])
-        v = np.concatenate(parts["v"])
-        ids, inv = np.unique(i, return_inverse=True)
-        slab = np.zeros((len(ids), sj, sk), dtype=np.float64)
-        slab[inv, j, k] = v  # coords are unique per (i,j,k) — exact scatter
-        for lo in range(0, len(ids), 64):
-            hi = min(lo + 64, len(ids))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids[lo:hi], type=pa.int64()),
-                    pa.array(
-                        [slab[t].tobytes() for t in range(lo, hi)],
-                        type=pa.binary(),
-                    ),
-                ],
-                names=["id", "payload"],
-            )
-
     packed = (
         coords.select("i", "j", "k", "v")
         .repartition(n_parts, "i")
-        .mapInArrow(to_slices, "id long, payload binary")
+        .mapInArrow(partial(_to_slices, sj=sj, sk=sk), "id long, payload binary")
     )
-
-    def reassemble(rows):
-        ids: list[int] = []
-        mats: list[np.ndarray] = []
-        for r in rows:
-            ids.append(r[0])
-            mats.append(
-                np.frombuffer(bytes(r[1]), dtype=np.float64).reshape(sj, sk)
-            )
-        if ids:
-            yield np.asarray(ids, dtype=np.int64), np.stack(mats)
 
     # .rdd here is partition-preserving (no shuffle); each RDD partition
     # reassembles exactly one slab group.  persist=False for single-pass
     # consumers (tensor_slices) — only the ALS loop re-reads slabs.
-    rdd = packed.rdd.mapPartitions(reassemble)
+    rdd = packed.rdd.mapPartitions(partial(_reassemble, sj=sj, sk=sk))
     if persist:
         rdd = rdd.persist(StorageLevel.MEMORY_AND_DISK)
     return rdd
@@ -695,11 +711,15 @@ def tucker_hosvd(
 
     # the model owns the only persisted RDD: materialize the A rows, then
     # drop the projection they were computed from (the a_blocks pattern)
+    # and the executors' broadcast copies (the driver keeps the values, so
+    # a recompute of a_rdd's lineage still finds them)
     a_rdd = y_rdd.mapPartitions(a_rows, preservesPartitioning=True).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     a_rdd.count()
     y_rdd.unpersist()
+    for b in (bB, bC, bW):
+        b.unpersist()
     core = (np.diag(sigma) @ W.T).reshape(r1, r2, r3)
     slabs.unpersist()
     return TuckerModel(

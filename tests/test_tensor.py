@@ -192,13 +192,11 @@ def test_two_jobs_per_sweep(spark):
     assert n == 1 + 2 * 3 + 1
 
 
-@pytest.mark.parametrize("variant", ["parafac", "parafac_distributed"])
-def test_early_stop_releases_slabs_and_broadcasts(spark, monkeypatch, variant):
-    """After a ``tol`` stop nothing the loop persisted or broadcast stays
-    behind except the distributed model's own a_blocks."""
+@pytest.fixture
+def broadcasts(spark, monkeypatch):
+    """``(made, released)``: every broadcast the test creates, and the ids
+    of those it unpersists."""
     from pyspark.broadcast import Broadcast
-
-    from paraslice_spark.operators import tensor
 
     sc = spark.sparkContext
     made, released = [], set()
@@ -214,6 +212,17 @@ def test_early_stop_releases_slabs_and_broadcasts(spark, monkeypatch, variant):
 
     monkeypatch.setattr(sc, "broadcast", broadcast)
     monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    return made, released
+
+
+@pytest.mark.parametrize("variant", ["parafac", "parafac_distributed"])
+def test_early_stop_releases_slabs_and_broadcasts(spark, broadcasts, variant):
+    """After a ``tol`` stop nothing the loop persisted or broadcast stays
+    behind except the distributed model's own a_blocks."""
+    from paraslice_spark.operators import tensor
+
+    sc = spark.sparkContext
+    made, released = broadcasts
     coords = _planted_coords(spark, seed=41)
     before = set(sc._jsc.getPersistentRDDs())
     model = getattr(tensor, variant)(spark, coords, tol=1.0, max_iter=10, n_parts=3)
@@ -302,6 +311,50 @@ def test_tucker_model_owns_its_persisted_rdd(spark):
     assert set(jsc.getPersistentRDDs()) - before == {m.a_rows.id()}
     memo.forget(spark, SF_SMALL, "tucker_leak_test")
     assert set(jsc.getPersistentRDDs()) - before == set()
+
+
+def test_tucker_releases_its_broadcasts(spark, broadcasts):
+    """Tucker unpersists its factor broadcasts once a_rows is materialized;
+    the driver keeps their values, so recomputing a_rows still works."""
+    from paraslice_spark.operators.tensor import tucker_hosvd
+
+    made, released = broadcasts
+    m = tucker_hosvd(spark, _planted_coords(spark, seed=19))
+    assert len(made) == 3 and all(id(b) in released for b in made)
+    want = m.a_rows.collect()
+    m.a_rows.unpersist()  # the next action recomputes from the coords
+    got = m.a_rows.collect()
+    assert [i.tolist() for i, _ in got] == [i.tolist() for i, _ in want]
+    for (_, a), (_, b) in zip(got, want):
+        np.testing.assert_array_equal(a, b)
+
+
+def test_build_slices_ships_module_level_kernels(spark, monkeypatch):
+    """Both slab-build kernels are pickled by reference, so the slab
+    stage's Python workers import the package and with it the worker
+    set-up patch (``paraslice_spark.pyworker``)."""
+    import pickle
+
+    from pyspark import RDD
+
+    coords = _planted_coords(spark, seed=23)
+    shipped = []
+    real_arrow, real_parts = type(coords).mapInArrow, RDD.mapPartitions
+
+    def map_in_arrow(self, func, *args, **kwargs):
+        shipped.append(func)
+        return real_arrow(self, func, *args, **kwargs)
+
+    def map_partitions(self, f, *args, **kwargs):
+        shipped.append(f)
+        return real_parts(self, f, *args, **kwargs)
+
+    monkeypatch.setattr(type(coords), "mapInArrow", map_in_arrow)
+    monkeypatch.setattr(RDD, "mapPartitions", map_partitions)
+    build_slices(coords, tensor_shape(coords), n_parts=2, persist=False)
+    assert [f.func.__name__ for f in shipped] == ["_to_slices", "_reassemble"]
+    for f in shipped:
+        pickle.dumps(f)  # the stdlib pickles functions only by reference
 
 
 def test_tucker_declared_query_runs(spark):
