@@ -11,188 +11,44 @@ package populates the registry, and this module just re-exports it.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 import paraslice_spark.operators  # noqa: F401  (registers all queries)
 from paraslice_spark.registry import ORACLES, QUERIES
 
-# The driver grades the FIRST ~50 queries of this dict per round, so order
-# encodes grading priority.  Round-16 re-tier (VERDICT r15 next-round #9):
-# CORRECTNESS_r15 graded 50/50 clean (49 hash-green + similarity_ivfpq_ann
-# rows-only by design) — the 9 r15 tier-0 additions, ALL 39 of the old
-# _T6_R9_GRADED, and the first 2 of _T7_R10_GRADED — so the r9 era is fully
-# closed (tuple deleted) and _T7 shrinks to its 48 ungraded r10-era
-# stragglers, now the oldest standing verdicts and therefore tier 1.
-# The 50 names r15 graded move to _T12_R15_GRADED at the back.
-# Tier 0 (no tuple): r16 is an optimization round — no new queries — so
-# the ~50 sample grades the 48 _T7 stragglers + the first ~2 of _T8.
-_T7_R10_GRADED: tuple[str, ...] = (
-    # the 48 r10-graded names CORRECTNESS_r15's sample didn't reach
-    "events_session_watermark_audit", "dedup_survivorship_bias",
-    "pipeline_release_diff", "similarity_quantizer_append_audit",
-    "scalar_conditional_pack", "scalar_datetime_pack", "scalar_math_pack",
-    "scalar_string_pack", "set_except", "set_except_all", "set_intersect",
-    "set_intersect_all", "set_union_all", "set_union_distinct",
-    "similarity_topk_cosine",
-    "agg_mode_deterministic", "q6_forecast_revenue", "q18_large_orders",
-    "q4_priority_late_ship", "q7_volume_shipping",
-    "multimodal_feature_extract", "events_funnel", "events_retention",
-    "events_funnel_users", "events_topk_paths", "events_streaks",
-    "dedup_edit_distance", "dedup_groups_star", "embedding_gram_matrix",
-    "similarity_knn_graph", "dedup_incremental_fp", "dedup_simhash_bands",
-    "sort_limit_offset", "sort_multikey_nulls", "stream_asof_join",
-    "subquery_correlated_scalar", "subquery_in", "subquery_scalar",
-    "tensor_build_coords", "text_langid", "text_ngrams", "text_profile",
-    "text_quality", "text_tfidf", "text_wordcount", "topk_revenue",
-    "scan_events_ts", "join_time_interval",
-)
-_T8_R11_GRADED: tuple[str, ...] = (
-    # the 50 names CORRECTNESS_r11 graded: the 7 r11 additions + all 17 of
-    # the old r5 tier + 26 of the r6 tier
-    "events_retention_survivorship", "pipeline_pack_waste_sweep",
-    "pipeline_shard_balance_audit", "sample_split_stability_audit",
-    "stats_sample_error_sweep", "stream_session_watermark_replay",
-    "stream_tumbling_watermark_replay",
-    "join_asof", "join_self_sequences", "stream_tumbling_counts",
-    "stream_sliding_avg", "stream_session_windows", "stream_dedup_exact",
-    "agg_count_distinct", "agg_multi_distinct", "agg_conditional",
-    "agg_cube", "agg_global", "agg_grouping_sets", "agg_histogram",
-    "agg_max_by", "agg_percentile", "agg_pivot", "agg_pricing_summary",
-    "q3_shipping_priority", "q10_returned_revenue", "q14_promo_share",
-    "scan_parquet", "scan_projection", "join_star_5way",
-    "join_broadcast_inner", "join_sortmerge_inner", "join_left_outer",
-    "join_full_outer", "join_semi", "join_anti", "join_cross",
-    "join_range_theta", "agg_rollup", "agg_stats",
-    "q2_min_cost_supplier", "q8_market_share", "q9_product_type_profit",
-    "q11_important_parts", "q12_late_lines_priority",
-    "q13_customer_distribution", "q15_top_supplier",
-    "q16_supplier_part_counts", "q17_small_quantity_revenue",
-    "q19_discounted_revenue",
-)
-_T9_R12_GRADED: tuple[str, ...] = (
-    # the 50 names CORRECTNESS_r12 graded: the 6 r12 additions + all 22 of
-    # the old r6 tier + 22 of the r7 tier
-    "stream_update_mode_replay", "stream_complete_mode_replay",
-    "similarity_signlsh_band_sweep", "embedding_quant_bits_sweep",
-    "text_decontaminate_gram_sweep", "text_repetition_cap_sweep",
-    "q20_bulk_shippers", "q21_waiting_suppliers",
-    "q22_dormant_balances", "join_salted_skew", "multimodal_phash_pairs",
-    "audit_constraints", "events_sessionized_funnel", "events_anomaly_zscore",
-    "sample_split_train_val_test", "text_decontaminate",
-    "pipeline_dataset_build", "graph_pagerank_knn", "graph_triangle_count",
-    "similarity_signlsh_ann", "events_ab_test", "events_ab_cuped",
-    "events_scd2_status", "agg_incremental_merge",
-    "events_chi2_independence", "events_forecast_backtest",
-    "text_zipf_fit", "window_cumulative_distinct",
-    "agg_percentile_histogram", "agg_countmin_topk_error",
-    "events_forecast_backtest_by_type", "supplier_scorecard",
-    "market_basket_pairs", "events_active_users", "events_heavy_hitters",
-    "sample_bottom_k", "dedup_minhash_estimate_error",
-    "dedup_group_size_histogram", "graph_knn_jaccard", "text_bpe_pairs",
-    "text_repetition_profile", "pipeline_sequence_pack",
-    "text_bloom_prefilter",
-    "events_markov_transitions", "customer_rfm_segments",
-    "part_abc_analysis", "graph_degree_distribution",
-    "events_anomaly_mad", "events_seasonality_profile", "text_vocab_growth",
-)
-_T10_R13_GRADED: tuple[str, ...] = (
-    # the 50 names CORRECTNESS_r13 graded: the 6 r13 additions + all 27 of
-    # the old r7 tier + the first 17 of the r8 tier
-    "stream_session_complete_replay", "events_binseg_changepoint",
-    "tensor_hosvd_energy_audit", "stats_zonemap_prune_audit",
-    "graph_clustering_coefficient", "events_anova_calendar",
-    "text_boilerplate_grams", "text_collocations_pmi",
-    "events_interarrival_profile",
-    "agg_string_concat", "multimodal_decode_meta", "project_arithmetic",
-    "reshape_unpivot", "filter_between_in_like", "filter_compound",
-    "filter_null_semantics", "filter_regexp", "udf_grouped_map",
-    "udf_pandas_vectorized", "udf_scalar_py", "udf_udtf_tokenize",
-    "agg_approx_distinct", "agg_approx_quantile", "dedup_embedding_cosine",
-    "parafac_cp_als", "parafac_cp_als_dist",
-    "parafac_factors_a", "sample_bernoulli", "similarity_ivf_ann",
-    "similarity_lsh_ann", "tucker_hosvd_core",
-    "tensor_slices", "dedup_minhash_pairs",
-    "agg_cms_selfjoin_size", "agg_kmv_distinct_error",
-    "lineitem_mannwhitney_u", "orders_ks_price_shift",
-    "lineitem_spearman_qty_price", "orders_benford_audit",
-    "stream_countmin_cells", "multimodal_phash_groups",
-    "stats_collect_lineitem", "pipeline_token_budget", "customer_ltv_cohorts",
-    "customer_revenue_deciles", "events_cusum_changepoint",
-    "events_session_concurrency", "customer_gini_by_nation",
-    "events_funnel_latency", "supplier_hhi_by_type",
-)
-_T11_R14_GRADED: tuple[str, ...] = (
-    # the 50 names CORRECTNESS_r14 graded: the 6 r14 additions + all 33 of
-    # the old r8 tier + the first 11 of the r9 tier
-    "stats_zorder_prune_audit", "stats_bloom_prune_audit",
-    "stats_compaction_waste_audit", "stats_clustering_depth_audit",
-    "stats_runtime_filter_audit", "embedding_dim_truncation_audit",
-    "graph_lpa_communities", "orders_ship_latency",
-    "events_watermark_late_audit", "events_autocorr_minutes",
-    "events_runs_test", "orders_backlog_profile", "events_ohlc_hourly",
-    "customer_reorder_gaps", "events_value_drift_psi", "events_haar_energy",
-    "similarity_ann_recall", "dedup_method_agreement",
-    "embedding_label_centroid_sim",
-    "embedding_cosine_histogram", "embedding_int8_quant_audit",
-    "graph_copurchase_kcore_trace", "pipeline_quality_filter",
-    "pipeline_pack_chunk_reader", "pipeline_pack_append_audit",
-    "pipeline_doc_chunks", "text_hashed_features", "text_doc_keywords",
-    "pipeline_dataset_mix", "pipeline_length_buckets", "text_langid_eval",
-    "dedup_keep_best", "pipeline_dedup_dataset", "agg_money_split_sum",
-    "agg_salted_skew", "agg_hll_sketch_merge", "agg_stats_bivariate",
-    "q5_local_supplier_volume", "multimodal_resize_meta",
-    "stats_histogram_lineitem", "stats_shuffle_skew_audit",
-    "stats_eqdepth_histogram_lineitem", "events_tukey_fences",
-    "customer_band_migration", "events_watermark_late_replay",
-    "events_watermark_delay_sweep", "events_overdispersion",
-    "customer_pareto_skyline", "events_theil_sen_trend",
-    "events_attribution_last_touch",
-)
-_T12_R15_GRADED: tuple[str, ...] = (
-    # the 50 names CORRECTNESS_r15 graded: the 9 r15 additions + all 39 of
-    # the old r9 tier + the first 2 of the r10 tier
-    "cdc_upsert_last_wins", "cdc_merge_classify_audit", "cdc_snapshot_diff",
-    "cdc_log_compaction_audit", "cdc_resurrection_audit",
-    "stats_join_strategy_audit", "stats_partition_sizing_audit",
-    "stats_bucket_colocation_audit", "stats_partial_agg_audit",
-    "dedup_incremental_audit",
-    "pipeline_shard_manifest", "text_novelty_curve",
-    "graph_degree_assortativity", "tensor_mode_skew_profile",
-    "tensor_unfold_gram_type", "multimodal_frame_sample",
-    "events_sessionize", "sample_temperature", "scalar_variant_pack",
-    "similarity_ivfpq_ann", "dedup_groups", "pipeline_curriculum",
-    "text_token_stats", "text_unigram_logprob", "window_ranking",
-    "window_topn_per_group", "window_lag_lead", "window_running_sum",
-    "window_moving_avg", "window_range_frame", "window_distribution",
-    "window_distribution_partitioned", "window_first_last",
-    "text_fingerprint", "scalar_array_pack", "scalar_json_pack",
-    "agg_collect_list_ordered", "agg_collect_set", "agg_decimal_money",
-    "dedup_exact", "dedup_ngram_jaccard", "embedding_label_stats",
-    "events_hourly_gapfill", "join_right_outer", "multimodal_join",
-    "sample_stratified_hash", "scalar_bitwise_pack", "scalar_cast_pack",
-    "agg_kmv_intersection_error", "stats_join_cardinality_audit",
-)
+_HERE = Path(__file__).resolve().parent
+_GRADED_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def _rotated(d: dict) -> dict:
-    """Order queries by grading priority (tier comment above)."""
-    tier = {}
-    for t, names in enumerate(
-        (
-            _T7_R10_GRADED,
-            _T8_R11_GRADED,
-            _T9_R12_GRADED,
-            _T10_R13_GRADED,
-            _T11_R14_GRADED,
-            _T12_R15_GRADED,
-        ),
-        start=1,
-    ):
-        for i, n in enumerate(names):
-            tier[n] = (t, i)
-    keys = sorted(d, key=lambda k: tier.get(k, (0, 0)))
+def grading_order(d: dict, directory: Path = _HERE) -> dict:
+    """Order ``d`` by grading priority: each round grades only the first
+    ~50 queries and records them in ``CORRECTNESS_r{N}.json``.
+
+    Never-graded names come first, then names by ascending last-graded
+    round (the highest N whose file has the name as a key); ties keep
+    their position in that round's file (the order they were graded in),
+    then registry order.  Unreadable or non-object files are skipped; no
+    files at all leaves registry order."""
+    rounds = []
+    for path in directory.glob("CORRECTNESS_r*.json"):
+        m = _GRADED_FILE.fullmatch(path.name)
+        if m:
+            rounds.append((int(m[1]), path))
+    last: dict[str, tuple[int, int]] = {}
+    for n, path in sorted(rounds):
+        try:
+            graded = json.loads(path.read_text())
+        except (OSError, ValueError):
+            continue
+        if isinstance(graded, dict):
+            for pos, name in enumerate(graded):
+                last[name] = (n, pos)
+    keys = sorted(d, key=lambda k: last.get(k, (-1, 0)))
     return {k: d[k] for k in keys}
 
 
@@ -203,10 +59,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return _rotated(QUERIES)
+    return grading_order(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL for each hash-checkable query; non-SQL-expressible
     ops are intentionally absent (driver records rows-only)."""
-    return _rotated(ORACLES)
+    return grading_order(ORACLES)

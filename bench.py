@@ -41,6 +41,56 @@ def steal_pct(before: tuple[int, int] | None, after: tuple[int, int] | None) -> 
     return round(100.0 * (after[1] - before[1]) / (after[0] - before[0]), 3)
 
 
+def sched_probe(spark) -> dict:
+    """Best/median ms per empty task and per shuffle stage for this window."""
+    # Scheduler probe (VERDICT r12 #3): this container drifts between
+    # ~2 ms/task and ~12 ms/task of PURE task-launch overhead (empty
+    # tasks, zero data) at near-zero /proc/stat steal — a mode steal%
+    # cannot see.  Task-count-heavy queries (iterative graph/kNN
+    # consumers, Python-worker families) inflate proportionally while
+    # data-bound plans don't.  Recording best/median ms-per-empty-task
+    # NEXT TO the timings makes each window's drift attribution in-file.
+    sc = spark.sparkContext
+    sc.parallelize(range(64), 64).count()  # probe warm-up
+    probe = []
+    for _ in range(5):
+        t0 = time.perf_counter()
+        sc.parallelize(range(64), 64).count()
+        probe.append(time.perf_counter() - t0)
+    # Shuffle-stage probe (r15, VERDICT r14 #2 closure): the container has
+    # a SECOND latency mode the empty-task probe cannot see — fixed cost
+    # per SHUFFLE stage (exchange write/read + codegen per stage), measured
+    # drifting 90-480 ms/tiny-stage across sessions at ~0.02 % steal and a
+    # flat ~7 ms/task empty probe.  Stage-count-heavy queries (the kNN
+    # consumer family: lcc = 15 post-memo stages over a 3.9k-row edge
+    # table) inflate proportionally; data-bound plans don't.  A 10-stage
+    # groupBy chain over 1000 rows records ms-per-shuffle-stage in-file.
+    from pyspark.sql import functions as F
+
+    def _shuffle_chain() -> None:
+        x = spark.range(1000)
+        for i in range(10):
+            x = (
+                x.groupBy((F.col("id") % (100 - i)).alias("id"))
+                .agg(F.count(F.lit(1)).alias("c"))
+                .select("id")
+            )
+        x.count()
+
+    _shuffle_chain()  # codegen warm-up
+    sprobe = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        _shuffle_chain()
+        sprobe.append(time.perf_counter() - t0)
+    return {
+        "ms_per_empty_task_best": round(min(probe) / 64 * 1000, 2),
+        "ms_per_empty_task_median": round(sorted(probe)[2] / 64 * 1000, 2),
+        "ms_per_shuffle_stage_best": round(min(sprobe) / 10 * 1000, 1),
+        "ms_per_shuffle_stage_median": round(sorted(sprobe)[1] / 10 * 1000, 1),
+    }
+
+
 #: Heavy-arm query list (VERDICT r15 #5): at sf0.1/local[32] the suite is
 #: scheduling-overhead-bound (the 8-core arm beats the 32-core arm; per-query
 #: core ratios <= 1 everywhere), so optimization rounds lack a parallelism
@@ -135,52 +185,7 @@ def main() -> int:
     materialize(tables["orders"])
     materialize(tables["events"])
 
-    # Scheduler probe (VERDICT r12 #3): this container drifts between
-    # ~2 ms/task and ~12 ms/task of PURE task-launch overhead (empty
-    # tasks, zero data) at near-zero /proc/stat steal — a mode steal%
-    # cannot see.  Task-count-heavy queries (iterative graph/kNN
-    # consumers, Python-worker families) inflate proportionally while
-    # data-bound plans don't.  Recording best/median ms-per-empty-task
-    # NEXT TO the timings makes each window's drift attribution in-file.
-    sc = spark.sparkContext
-    sc.parallelize(range(64), 64).count()  # probe warm-up
-    probe = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        sc.parallelize(range(64), 64).count()
-        probe.append(time.perf_counter() - t0)
-    # Shuffle-stage probe (r15, VERDICT r14 #2 closure): the container has
-    # a SECOND latency mode the empty-task probe cannot see — fixed cost
-    # per SHUFFLE stage (exchange write/read + codegen per stage), measured
-    # drifting 90-480 ms/tiny-stage across sessions at ~0.02 % steal and a
-    # flat ~7 ms/task empty probe.  Stage-count-heavy queries (the kNN
-    # consumer family: lcc = 15 post-memo stages over a 3.9k-row edge
-    # table) inflate proportionally; data-bound plans don't.  A 10-stage
-    # groupBy chain over 1000 rows records ms-per-shuffle-stage in-file.
-    from pyspark.sql import functions as _F
-
-    def _shuffle_chain() -> None:
-        x = spark.range(1000)
-        for i in range(10):
-            x = (
-                x.groupBy((_F.col("id") % (100 - i)).alias("id"))
-                .agg(_F.count(_F.lit(1)).alias("c"))
-                .select("id")
-            )
-        x.count()
-
-    _shuffle_chain()  # codegen warm-up
-    sprobe = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _shuffle_chain()
-        sprobe.append(time.perf_counter() - t0)
-    sched_probe = {
-        "ms_per_empty_task_best": round(min(probe) / 64 * 1000, 2),
-        "ms_per_empty_task_median": round(sorted(probe)[2] / 64 * 1000, 2),
-        "ms_per_shuffle_stage_best": round(min(sprobe) / 10 * 1000, 1),
-        "ms_per_shuffle_stage_median": round(sorted(sprobe)[1] / 10 * 1000, 1),
-    }
+    sched = sched_probe(spark)
 
     # best-of-N per query, matching BASELINE.md's best-of-3 protocol — this
     # container shows roaming multi-second noisy-neighbor stalls that would
@@ -241,7 +246,7 @@ def main() -> int:
     # stage-count-bound queries (data-bound queries divide by the same
     # constant, so ordering within a window is unchanged).  Secondary
     # only — the reported primary numbers are untouched.
-    stage_ms = sched_probe["ms_per_shuffle_stage_median"]
+    stage_ms = sched["ms_per_shuffle_stage_median"]
     queries_stage_norm = {
         name: round(t * 1000.0 / stage_ms, 2) if (t > 0 and stage_ms > 0) else None
         for name, t in times.items()
@@ -260,7 +265,7 @@ def main() -> int:
         "runs_per_query": runs,
         "wallclock_all_runs": wallclock,
         "suite_steal_pct": steal_pct(cpu_suite0, cpu_sample()),
-        "sched_probe": sched_probe,
+        "sched_probe": sched,
         "cpus": cpus,
         "sf": sf,
         "n_errors": n_errors,
@@ -280,7 +285,7 @@ def main() -> int:
         "wallclock_all_runs": wallclock,
         "suite_steal_pct": stdout_line["suite_steal_pct"],
         "steal_suspect_queries": noisy,
-        "sched_probe": sched_probe,
+        "sched_probe": sched,
         "queries_stage_norm": queries_stage_norm,
         "queries_run1": run1,
         # per-query timings for memoized families are run-order-dependent:

@@ -110,7 +110,6 @@ def tensor_build_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
     id broadcast maps`` instead of a global window — same output contract.
     """
     ev = load_tables(spark, sf_dir)["events"]
-    from pyspark.sql import Window
 
     e = ev.select(
         "user_id",
@@ -604,7 +603,6 @@ def parafac_cp_als_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def parafac_factors_a(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T8 declared: mode-0 factor joined back to natural keys (user_id)."""
     ev = load_tables(spark, sf_dir)["events"]
-    from pyspark.sql import Window
 
     model = _fitted(spark, sf_dir)
     fa = factors_to_df(spark, model.A, scale=4)

@@ -92,9 +92,7 @@ def _repair_events(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load all fixture tables from ``sf_dir`` with schemas repaired.
 
     Registers each as a temp view (S5) so ``spark.sql`` twins work.
@@ -108,8 +106,7 @@ def load_tables(
             if name == "events":
                 df = _repair_events(df)
             out[name] = df
-            if register_views:
-                df.createOrReplaceTempView(name)
+            df.createOrReplaceTempView(name)
         return out
 
     return memo(spark, sf_dir, "tables", build)

@@ -7,6 +7,12 @@ Oracle-less queries get a rows-run smoke check.
 
 from __future__ import annotations
 
+import json
+import re
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 import paraslice_spark.operators  # noqa: F401
@@ -83,27 +89,81 @@ def test_collect_array_forms(spark, fn_name, oracle):
     assert not problems, f"{fn_name}:\n" + "\n".join(problems)
 
 
-def test_rotation_unchecked_first():
-    """queries()/oracle_sql() must order by grading-priority tier (never
-    driver-graded first, standing greens last), so a driver that grades a
-    ~50-query prefix reaches everything without a verdict."""
+def _graded(tmp_path, n, names, raw=None):
+    path = tmp_path / f"CORRECTNESS_r{n}.json"
+    path.write_text(raw if raw is not None else json.dumps(dict.fromkeys(names, {})))
+
+
+def _order(directory, names="abcdef"):
     import __spark_entry__ as e
 
-    names = list(e.queries())
-    tiers = (
-        e._T7_R10_GRADED,
-        e._T8_R11_GRADED,
-        e._T9_R12_GRADED,
-        e._T10_R13_GRADED,
-        e._T11_R14_GRADED,
-        e._T12_R15_GRADED,
+    return "".join(e.grading_order(dict.fromkeys(names), directory))
+
+
+@pytest.mark.parametrize(
+    "files,names,expected",
+    [
+        ({2: "bd", 1: "ce"}, "abcdef", "afcebd"),  # never graded, then oldest
+        ({3: "ab", 5: "c", 9: "a"}, "abc", "bca"),  # r3 + r9 counts as r9
+        ({10: "a", 9: "ab", "02": "c"}, "abc", "cba"),  # integer rounds
+        ({4: "ecb"}, "abcdef", "adfecb"),  # ties: position in the file
+        ({}, "abcdef", "abcdef"),  # no files: registry order
+    ],
+)
+def test_grading_order_rule(tmp_path, files, names, expected):
+    for n, graded in files.items():
+        _graded(tmp_path, n, graded)
+    assert _order(tmp_path, names) == expected
+
+
+def test_grading_order_missing_directory_is_registry_order(tmp_path):
+    assert _order(tmp_path / "missing") == "abcdef"
+
+
+def test_grading_order_skips_malformed_files(tmp_path):
+    _graded(tmp_path, 1, "b")
+    _graded(tmp_path, 2, "", raw="{not json")
+    _graded(tmp_path, 3, "", raw=json.dumps(["a", "c"]))
+    (tmp_path / "CORRECTNESS_r4.json").mkdir()
+    assert _order(tmp_path, "abc") == "acb"
+
+
+def test_grading_order_independent_of_cwd():
+    """The entry module is imported from another cwd (e.g. /tmp): the
+    rotation must read the graded files next to the module."""
+    import __spark_entry__ as e
+
+    here = str(Path(e.__file__).resolve().parent)
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]); "
+        "import __spark_entry__ as e; print(json.dumps(list(e.queries())))"
     )
-    listed = [n for t in tiers for n in t]
-    new = [n for n in names if n not in listed]
-    assert names == new + [n for n in listed if n in names]
-    # every tier name must still exist (no stale rotation entries)
-    assert set(listed) <= set(names)
+    out = subprocess.run(
+        [sys.executable, "-c", code, here],
+        cwd="/tmp", capture_output=True, text=True, check=True,
+    ).stdout
+    assert json.loads(out.strip().splitlines()[-1]) == list(e.queries())
+
+
+def test_rotation_unchecked_first():
+    """The ~50-query prefix graded next must reach nothing the newest
+    CORRECTNESS_r*.json already graded, and the rotation only
+    reorders: same names, same query functions."""
+    import __spark_entry__ as e
+
+    here = Path(e.__file__).resolve().parent
+    graded = {
+        int(m[1]): p
+        for p in here.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    }
+    names = list(e.queries())
+    assert set(names) == set(QUERIES)
+    assert all(e.queries()[n] is QUERIES[n] for n in names)
     assert list(e.oracle_sql()) == [n for n in names if n in e.oracle_sql()]
+    if graded:
+        newest = json.loads(graded[max(graded)].read_text())
+        assert not set(names[:50]) & set(newest)
 
 
 def test_entry_smoke(spark):
