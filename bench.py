@@ -51,12 +51,24 @@ def sched_probe(spark) -> dict:
     # data-bound plans don't.  Recording best/median ms-per-empty-task
     # NEXT TO the timings makes each window's drift attribution in-file.
     sc = spark.sparkContext
-    sc.parallelize(range(64), 64).count()  # probe warm-up
-    probe = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        sc.parallelize(range(64), 64).count()
-        probe.append(time.perf_counter() - t0)
+
+    def _timed(job, reps: int) -> list[float]:
+        job()  # warm-up
+        out = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            job()
+            out.append(time.perf_counter() - t0)
+        return out
+
+    probe = _timed(lambda: sc.parallelize(range(64), 64).count(), 5)
+    # The probe above is a Python RDD job, so Python-worker set-up is part
+    # of its per-task time.  The same 64 empty tasks as one JVM-only stage
+    # (the noop sink writes nothing, no Python worker starts) isolate the
+    # scheduler's own launch cost.
+    jvm_probe = _timed(
+        lambda: spark.range(0, 64, 1, 64).write.format("noop").mode("overwrite").save(), 5
+    )
     # Shuffle-stage probe (r15, VERDICT r14 #2 closure): the container has
     # a SECOND latency mode the empty-task probe cannot see — fixed cost
     # per SHUFFLE stage (exchange write/read + codegen per stage), measured
@@ -77,15 +89,12 @@ def sched_probe(spark) -> dict:
             )
         x.count()
 
-    _shuffle_chain()  # codegen warm-up
-    sprobe = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        _shuffle_chain()
-        sprobe.append(time.perf_counter() - t0)
+    sprobe = _timed(_shuffle_chain, 3)  # the warm-up also warms codegen
     return {
         "ms_per_empty_task_best": round(min(probe) / 64 * 1000, 2),
         "ms_per_empty_task_median": round(sorted(probe)[2] / 64 * 1000, 2),
+        "ms_per_empty_task_jvm_best": round(min(jvm_probe) / 64 * 1000, 2),
+        "ms_per_empty_task_jvm_median": round(sorted(jvm_probe)[2] / 64 * 1000, 2),
         "ms_per_shuffle_stage_best": round(min(sprobe) / 10 * 1000, 1),
         "ms_per_shuffle_stage_median": round(sorted(sprobe)[1] / 10 * 1000, 1),
     }

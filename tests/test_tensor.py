@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from paraslice_spark.operators.tensor import (
     build_slices,
@@ -174,8 +175,9 @@ def _jobs_in_group(sc, group, fn):
 
 def test_two_jobs_per_sweep(spark):
     """Every Spark job costs a fixed scheduling floor, so the job count is
-    the CP-ALS cost model: one shape job, then two aggregates per sweep;
-    the distributed variant adds one job that materializes a_blocks."""
+    the CP-ALS cost model: on a DataFrame that is not a bare parquet scan,
+    one shape job, then two aggregates per sweep; the distributed variant
+    adds one job that materializes a_blocks."""
     from paraslice_spark.operators.tensor import parafac_distributed
 
     sc = spark.sparkContext
@@ -192,43 +194,188 @@ def test_two_jobs_per_sweep(spark):
     assert n == 1 + 2 * 3 + 1
 
 
-@pytest.fixture
-def broadcasts(spark, monkeypatch):
-    """``(made, released)``: every broadcast the test creates, and the ids
-    of those it unpersists."""
-    from pyspark.broadcast import Broadcast
+def _write_parquet(coords, path, **kw) -> str:
+    """Write a coords frame to one parquet file through pyarrow, so the row
+    groups and statistics are set by ``kw`` (``pq.write_table`` options)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.Table.from_pandas(coords.toPandas(), preserve_index=False), path, **kw)
+    return str(path)
+
+
+def _aggregated_shape(coords):
+    row = coords.agg(*[F.max(c) + 1 for c in "ijk"]).first()
+    return tuple(int(v) for v in row)
+
+
+def _one_file(spark, tmp_path, coords):
+    return spark.read.parquet(_write_parquet(coords, tmp_path / "c.parquet", row_group_size=50))
+
+
+def _three_files(spark, tmp_path, coords):
+    rows = coords.orderBy("i", "j", "k").toPandas()
+    (tmp_path / "d").mkdir()
+    for n, part in enumerate((rows[:100], rows[100:400], rows[400:])):
+        part.to_parquet(tmp_path / "d" / f"p{n}.parquet", index=False)
+    return spark.read.parquet(str(tmp_path / "d"))
+
+
+def _selected(spark, tmp_path, coords):
+    return _one_file(spark, tmp_path, coords).select("i", "j", "k", "v")
+
+
+def _filtered(spark, tmp_path, coords):
+    return _one_file(spark, tmp_path, coords).where("v > 0")
+
+
+def _from_sql(spark, tmp_path, coords):
+    _one_file(spark, tmp_path, coords).createOrReplaceTempView("footer_coords")
+    return spark.sql("SELECT i, j, k, v FROM footer_coords")
+
+
+def _no_statistics(spark, tmp_path, coords):
+    return spark.read.parquet(
+        _write_parquet(coords, tmp_path / "c.parquet", write_statistics=False)
+    )
+
+
+def _unopenable(spark, tmp_path, coords):
+    df = _one_file(spark, tmp_path, coords)
+    df.inputFiles = lambda: ["nosuchscheme://host/c.parquet"]  # the driver cannot open it
+    return df
+
+
+def _json(spark, tmp_path, coords):
+    coords.write.json(str(tmp_path / "j"))
+    return spark.read.schema("i long, j long, k long, v double").json(str(tmp_path / "j"))
+
+
+@pytest.mark.parametrize(
+    "make, from_footer",
+    [
+        (_one_file, True),
+        (_three_files, True),
+        (_selected, False),
+        (_filtered, False),
+        (_from_sql, False),
+        (_no_statistics, False),
+        (_unopenable, False),
+        (_json, False),
+    ],
+)
+def test_shape_from_footer_matches_aggregate(spark, tmp_path, make, from_footer):
+    """A bare parquet scan is sized from its footers with no Spark job;
+    any other frame, footers without statistics or a file the driver
+    cannot open fall back to the aggregate.  Both give the aggregate's
+    shape."""
+    from paraslice_spark.sources.io import parquet_int_bounds
+
+    coords = make(spark, tmp_path, _planted_coords(spark, si=13, sj=7, sk=9, seed=43))
+    assert (parquet_int_bounds(coords, ("i", "j", "k")) is not None) == from_footer
+    shape, jobs = _jobs_in_group(
+        spark.sparkContext, f"shape-{make.__name__}", lambda: tensor_shape(coords)
+    )
+    assert shape == _aggregated_shape(coords)
+    assert jobs == (0 if from_footer else 1)
+
+
+def test_parquet_coords_run_only_the_sweep_jobs(spark, tmp_path):
+    """On a bare parquet scan the shape comes from the footer, so a call
+    runs two jobs per sweep and nothing else (plus the distributed
+    variant's a_blocks job)."""
+    from paraslice_spark.operators.tensor import parafac_distributed
 
     sc = spark.sparkContext
-    made, released = [], set()
-    real_broadcast, real_unpersist = sc.broadcast, Broadcast.unpersist
+    coords = spark.read.parquet(
+        _write_parquet(_planted_coords(spark, seed=37), tmp_path / "c.parquet")
+    )
+    _, n = _jobs_in_group(
+        sc, "cp-jobs-local-parquet",
+        lambda: parafac(spark, coords, tol=0.0, max_iter=3, n_parts=3),
+    )
+    assert n == 2 * 3
+    model, n = _jobs_in_group(
+        sc, "cp-jobs-dist-parquet",
+        lambda: parafac_distributed(spark, coords, tol=0.0, max_iter=3, n_parts=3),
+    )
+    model.a_blocks.unpersist()
+    assert n == 2 * 3 + 1
+
+
+@pytest.mark.parametrize("variant", ["parafac", "parafac_distributed"])
+def test_parquet_and_in_memory_coords_fit_identically(spark, tmp_path, variant):
+    """Where the shape comes from changes nothing downstream: the same
+    tensor read from parquet gives the same fit trace, bit for bit."""
+    from paraslice_spark.operators import tensor
+
+    coords = _planted_coords(spark, seed=47, noise=0.3)
+    on_disk = spark.read.parquet(_write_parquet(coords, tmp_path / "c.parquet"))
+    fn = getattr(tensor, variant)
+    models = [fn(spark, c, rank=3, tol=0.0, max_iter=3, seed=5, n_parts=3)
+              for c in (coords, on_disk)]
+    if variant == "parafac_distributed":
+        for m in models:
+            m.a_blocks.unpersist()
+    assert models[0].fit_trace == models[1].fit_trace
+
+
+@pytest.mark.parametrize("source", ["frame", "parquet"])
+def test_negative_coordinate_rejected(spark, tmp_path, source):
+    """A negative index would wrap round numpy's indexing and overwrite
+    another cell of the slab; the shape step refuses it instead."""
+    coords = _planted_coords(spark, seed=53).union(
+        spark.createDataFrame([(1, -1, 0, 99.0)], "i long, j long, k long, v double")
+    )
+    if source == "parquet":
+        coords = spark.read.parquet(_write_parquet(coords, tmp_path / "c.parquet"))
+    with pytest.raises(ValueError, match="0-based"):
+        tensor_shape(coords)
+    with pytest.raises(ValueError, match="0-based"):
+        parafac(spark, coords, max_iter=1)
+
+
+@pytest.mark.parametrize("source", ["frame", "parquet"])
+def test_empty_coords_rejected(spark, tmp_path, source):
+    coords = spark.createDataFrame([], "i long, j long, k long, v double")
+    if source == "parquet":
+        coords = spark.read.parquet(_write_parquet(coords, tmp_path / "c.parquet"))
+    with pytest.raises(ValueError, match="coords is empty"):
+        tensor_shape(coords)
+    with pytest.raises(ValueError, match="coords is empty"):
+        parafac(spark, coords, max_iter=1)
+
+
+@pytest.fixture
+def broadcasts(spark, monkeypatch):
+    """Every broadcast the test creates, PySpark's own included (it
+    broadcasts any pickled task command above 1 MiB)."""
+    sc = spark.sparkContext
+    made = []
+    real_broadcast = sc.broadcast
 
     def broadcast(value):
         made.append(real_broadcast(value))
         return made[-1]
 
-    def unpersist(self, blocking=False):
-        released.add(id(self))
-        return real_unpersist(self, blocking)
-
     monkeypatch.setattr(sc, "broadcast", broadcast)
-    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
-    return made, released
+    return made
 
 
 @pytest.mark.parametrize("variant", ["parafac", "parafac_distributed"])
 def test_early_stop_releases_slabs_and_broadcasts(spark, broadcasts, variant):
-    """After a ``tol`` stop nothing the loop persisted or broadcast stays
-    behind except the distributed model's own a_blocks."""
+    """After a ``tol`` stop nothing the loop persisted stays behind except
+    the distributed model's own a_blocks, and the small factors rode in
+    the task closures, so there is no broadcast to release."""
     from paraslice_spark.operators import tensor
 
     sc = spark.sparkContext
-    made, released = broadcasts
     coords = _planted_coords(spark, seed=41)
     before = set(sc._jsc.getPersistentRDDs())
     model = getattr(tensor, variant)(spark, coords, tol=1.0, max_iter=10, n_parts=3)
     after = set(sc._jsc.getPersistentRDDs())
     assert model.n_iter == 2  # the first sweep that can compare fits stops
-    assert made and all(id(b) in released for b in made)
+    assert broadcasts == []
     if variant == "parafac_distributed":
         assert after - before == {model.a_blocks.id()}
         model.a_blocks.unpersist()
@@ -314,13 +461,13 @@ def test_tucker_model_owns_its_persisted_rdd(spark):
 
 
 def test_tucker_releases_its_broadcasts(spark, broadcasts):
-    """Tucker unpersists its factor broadcasts once a_rows is materialized;
-    the driver keeps their values, so recomputing a_rows still works."""
+    """Tucker ships B, C and W in its task closures, so it makes no
+    broadcast that could outlive the fit, and recomputing a_rows after it
+    is unpersisted still finds them."""
     from paraslice_spark.operators.tensor import tucker_hosvd
 
-    made, released = broadcasts
     m = tucker_hosvd(spark, _planted_coords(spark, seed=19))
-    assert len(made) == 3 and all(id(b) in released for b in made)
+    assert broadcasts == []
     want = m.a_rows.collect()
     m.a_rows.unpersist()  # the next action recomputes from the coords
     got = m.a_rows.collect()
