@@ -8,8 +8,16 @@ Spark-first:
 - **T1** builds a deterministic 3-way tensor relationally from ``events``
   (user × event_type × hour → sum(value)) — declared with a SQL oracle.
 - **T2** partitions coordinates into dense mode-0 slice slabs: one RDD
-  element = ``(slice_id, np.ndarray(J, K))``, batched per partition — the
+  element = ``(slice_ids, np.ndarray(m, J, K))`` per partition — the
   reference's namesake layout, BLAS-friendly, cached across iterations.
+  Slice ``i`` lives in partition ``pmod(Murmur3(i), n_parts)``, Spark's
+  hash partitioning, and rows naming one cell are summed.  Two readers
+  build byte-identical slabs: a bare parquet scan with plain, null-free
+  integer coordinates is read by Python tasks straight from its row
+  groups, which hash ``i`` themselves and ship one packed block per
+  (row group, slab partition) — no SQL plan, no row shuffle in the JVM;
+  any other frame goes through ``repartition`` and ``mapInArrow``
+  (:func:`build_slices` says why that reader stays).
 - **T3-T6** per-sweep kernels, two aggregate jobs over the resident slabs
   (each Spark job has a fixed scheduling cost, so sweep time is a job
   count): job 1 runs the partition-local mode-0 update (each slab owns its
@@ -31,8 +39,9 @@ default arguments, never in a ``sc.broadcast`` of ours: PySpark itself
 ships any pickled command above ``spark.broadcast.UDFCompressionThreshold``
 (1 MiB) as a broadcast, so a large factor still travels once per executor,
 and nothing is left to unpersist.  A bare parquet scan of the coords is
-sized from its footer statistics, so a call runs no Spark job before the
-sweeps (:func:`tensor_shape`).
+sized from its footer statistics, read once per call for the shape and
+the slab reader, so a call runs no Spark job before the sweeps
+(:func:`tensor_shape`).
 
 Python-task floor: each task of these short stages first runs PySpark's
 worker set-up, whose ``importlib.invalidate_caches()`` re-reads every zip
@@ -49,15 +58,25 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from functools import partial
+from itertools import groupby
+from operator import itemgetter
 
 import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+)
 
 from paraslice_spark.memo import memo
 from paraslice_spark.registry import query
-from paraslice_spark.sources.io import load_tables, parquet_int_bounds
+from paraslice_spark.sources.io import ParquetFooters, load_tables, parquet_footers
 
 _HOUR_US = 3_600_000_000
 
@@ -145,21 +164,36 @@ def tensor_build_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Columns of a coords frame, in the order the slab kernels take them.
+_COORDS = ("i", "j", "k", "v")
+#: Spark types of a coordinate column the parquet reader hashes itself:
+#: ``True`` where Spark's Murmur3 hashes the value as a long.
+_HASHED_AS_LONG = {ByteType: False, ShortType: False, IntegerType: False, LongType: True}
+_VALUE_TYPES = (ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+
+
+def _footers(coords: DataFrame) -> ParquetFooters | None:
+    return parquet_footers(coords, _COORDS[:3], _COORDS[3:])
+
+
 def tensor_shape(coords: DataFrame) -> tuple[int, int, int]:
     """Dense dims ``max + 1`` per mode of 0-based coords.
 
     A bare parquet scan is sized from its footer statistics with no Spark
-    job (:func:`~paraslice_spark.sources.io.parquet_int_bounds`); any other
+    job (:func:`~paraslice_spark.sources.io.parquet_footers`); any other
     frame, or one whose footers lack the statistics, runs one aggregate.
     Either way the minima come along, because a negative index would wrap
     round numpy's indexing in the slab scatter and land in another cell.
     Raises ``ValueError`` for empty coords and for a negative coordinate."""
-    modes = ("i", "j", "k")
-    bounds = parquet_int_bounds(coords, modes)
-    if bounds is None:
-        row = coords.agg(*[F.min(c) for c in modes], *[F.max(c) for c in modes]).first()
-        bounds = list(row[:3]), list(row[3:])
-    lo, hi = bounds
+    return _shape(coords, _footers(coords))
+
+
+def _shape(coords: DataFrame, footers: ParquetFooters | None) -> tuple[int, int, int]:
+    if footers is None:
+        row = coords.agg(*[F.min(c) for c in _COORDS[:3]], *[F.max(c) for c in _COORDS[:3]]).first()
+        lo, hi = list(row[:3]), list(row[3:])
+    else:
+        lo, hi = footers.lo, footers.hi
     if None in hi:
         raise ValueError("tensor_shape: coords is empty, no (i, j, k) cell to size a tensor from")
     if min(lo) < 0:
@@ -169,26 +203,33 @@ def tensor_shape(coords: DataFrame) -> tuple[int, int, int]:
     return tuple(int(v) + 1 for v in hi)
 
 
+def _scatter(i, j, k, v, sj: int, sk: int) -> tuple[np.ndarray, np.ndarray]:
+    """T2 scatter, the one kernel both slab readers share: one partition's
+    coordinates as ``(ids, X)``, ``ids`` its sorted distinct slice ids and
+    ``X[t]`` the dense J×K slice ``ids[t]``.
+
+    Rows that share an ``(i, j, k)`` cell are summed, the SUM rule of
+    :func:`tensor_build_coords`; a cell no row names holds 0.0.  The sum
+    starts from 0.0, so a single ``-0.0`` value is stored as ``0.0``."""
+    ids, inv = np.unique(i, return_inverse=True)
+    cell = (inv * sj + j.astype(np.int64)) * sk + k
+    X = np.bincount(cell, weights=v, minlength=len(ids) * sj * sk)
+    return ids.astype(np.int64), X.reshape(len(ids), sj, sk)
+
+
 def _to_slices(batches, sj: int, sk: int):
-    """T2 Arrow kernel: scatter one partition's coordinate batches into a
-    dense slab, emitted as ``(id, payload)`` batches of ≤64 slices."""
+    """T2 Arrow kernel of the DataFrame reader: scatter one partition's
+    coordinate batches into its slab, emitted as ``(id, payload)`` batches
+    of ≤64 slices."""
     import pyarrow as pa
 
-    parts: dict[str, list[np.ndarray]] = {"i": [], "j": [], "k": [], "v": []}
+    cols: list[list[np.ndarray]] = [[] for _ in _COORDS]
     for b in batches:
-        for name in parts:
-            parts[name].append(
-                b.column(name).to_numpy(zero_copy_only=False)
-            )
-    if not parts["i"]:
+        for c, name in zip(cols, _COORDS):
+            c.append(b.column(name).to_numpy(zero_copy_only=False))
+    if not cols[0]:
         return
-    i = np.concatenate(parts["i"])
-    j = np.concatenate(parts["j"])
-    k = np.concatenate(parts["k"])
-    v = np.concatenate(parts["v"])
-    ids, inv = np.unique(i, return_inverse=True)
-    slab = np.zeros((len(ids), sj, sk), dtype=np.float64)
-    slab[inv, j, k] = v  # coords are unique per (i,j,k) — exact scatter
+    ids, slab = _scatter(*map(np.concatenate, cols), sj, sk)
     for lo in range(0, len(ids), 64):
         hi = min(lo + 64, len(ids))
         yield pa.RecordBatch.from_arrays(
@@ -204,8 +245,8 @@ def _to_slices(batches, sj: int, sk: int):
 
 
 def _reassemble(rows, sj: int, sk: int):
-    """T2 RDD kernel: stack one partition's ``(id, payload)`` rows into the
-    batched slab ``(ids, X)``."""
+    """T2 RDD kernel of the DataFrame reader: stack one partition's
+    ``(id, payload)`` rows into the batched slab ``(ids, X)``."""
     ids: list[int] = []
     mats: list[np.ndarray] = []
     for r in rows:
@@ -215,6 +256,85 @@ def _reassemble(rows, sj: int, sk: int):
         )
     if ids:
         yield np.asarray(ids, dtype=np.int64), np.stack(mats)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+
+def _mix(h: np.ndarray, word: np.ndarray) -> np.ndarray:
+    k = _rotl(word * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+    return _rotl(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+
+
+def _spark_partition(x: np.ndarray, n_parts: int, as_long: bool) -> np.ndarray:
+    """Spark's ``pmod(hash(x), n_parts)`` for an integer column, i.e. the
+    partition ``repartition(n_parts, x)`` sends each value to: Murmur3
+    x86_32 with seed 42 (``Murmur3_x86_32.hashInt`` for byte, short and
+    int columns, ``hashLong`` for long ones), vectorized over uint32."""
+    if as_long:
+        w = x.astype(np.int64).view(np.uint64)
+        h = _mix(_mix(np.uint32(42), w.astype(np.uint32)), (w >> np.uint64(32)).astype(np.uint32))
+        h ^= np.uint32(8)
+    else:
+        h = _mix(np.uint32(42), x.astype(np.int32).view(np.uint32))
+        h ^= np.uint32(4)
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return np.mod(h.view(np.int32).astype(np.int64), n_parts)
+
+
+def _read_groups(groups, n_parts: int, as_long: bool):
+    """T2 kernel of the parquet reader: read this task's row groups with
+    pyarrow, one at a time, and cut each into the rows of every slab
+    partition (:func:`_spark_partition` of ``i``), emitted as
+    ``(partition, (i, j, k, v))`` records."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    for uri, items in groupby(groups, key=itemgetter(0)):
+        filesystem, path = fs.FileSystem.from_uri(uri)
+        with pq.ParquetFile(path, filesystem=filesystem) as f:
+            for _, g in items:
+                table = f.read_row_group(g, columns=list(_COORDS))
+                cols = [table.column(c).to_numpy() for c in _COORDS]
+                part = _spark_partition(cols[0], n_parts, as_long)
+                order = np.argsort(part, kind="stable")
+                cut = np.searchsorted(part[order], np.arange(n_parts + 1))
+                for p in range(n_parts):
+                    if cut[p] < cut[p + 1]:
+                        rows = order[cut[p] : cut[p + 1]]
+                        yield p, tuple(c[rows] for c in cols)
+
+
+def _partition_id(p: int) -> int:
+    return p
+
+
+def _slab_of_blocks(records, sj: int, sk: int):
+    """T2 kernel of the parquet reader: scatter one slab partition's
+    coordinate blocks into its batched slab ``(ids, X)``."""
+    blocks = [block for _, block in records]
+    if blocks:
+        yield _scatter(*(np.concatenate(c) for c in zip(*blocks)), sj, sk)
+
+
+def _parquet_hash(coords: DataFrame, footers: ParquetFooters | None) -> bool | None:
+    """How the parquet reader hashes ``i`` (``True``: as a long), or
+    ``None`` when the slabs must come from the DataFrame: the coords are not
+    a bare parquet scan with footer statistics, ``i``/``j``/``k`` are not
+    plain integer columns free of nulls, or ``v`` is not a plain number."""
+    if footers is None or footers.nulls != [0, 0, 0]:
+        return None
+    types = {f.name: type(f.dataType) for f in coords.schema.fields}
+    if any(types.get(c) not in _HASHED_AS_LONG for c in _COORDS[:3]):
+        return None
+    if types.get("v") not in _VALUE_TYPES:
+        return None
+    return _HASHED_AS_LONG[types["i"]]
 
 
 def build_slices(
@@ -232,27 +352,75 @@ def build_slices(
     single batched BLAS call per partition (measured ~3× per-iteration
     speed-up over slice-at-a-time at sf0.1). Slabs stay resident
     (MEMORY_AND_DISK) across all ALS iterations; hash-partitioning on the
-    slice id spreads a skewed mode uniformly.
+    slice id spreads a skewed mode uniformly.  Rows that name the same
+    cell are summed (:func:`_scatter`).
 
-    Construction is Arrow-vectorized (VERDICT r01 #5): a DataFrame
-    ``repartition(n_parts, i)`` co-locates each slice, ``mapInArrow``
-    scatters whole Arrow batches into the dense slab with ONE vectorized
-    numpy assignment (no per-coordinate Python), and the only
-    row-granular hop left is one pickled row PER SLICE (a ~sj×sk float64
-    payload blob, not sj×sk Rows).  Output batches are chunked ≤64 slices
-    so no RecordBatch approaches Arrow's 2 GiB int32-offset binary limit.
+    Two readers build the same slabs.  Slice ``i`` lands in partition
+    ``pmod(Murmur3(i, 42), n_parts)``, Spark's ``repartition(n_parts, "i")``,
+    and each slab lists its slices in ascending id, so both readers give
+    byte-identical slabs in the same partitions:
+
+    - **parquet**: when ``coords`` is a bare parquet scan whose footers
+      record integer statistics and no null for ``i``/``j``/``k``, with
+      plain integer ``i``/``j``/``k`` and a non-decimal numeric ``v``,
+      Python tasks read the row groups with pyarrow, hash ``i``
+      themselves (:func:`_spark_partition`) and send one packed
+      coordinate block per (row group, slab partition) through
+      ``partitionBy``: no SQL plan, no file scan in the JVM and no row
+      handed over one by one.  The executors must be able to open the
+      files the driver listed.
+    - **DataFrame**: any other frame (a projection, filter or SQL view, a
+      computed tensor such as :func:`tensor_build_coords`, another format)
+      goes through ``repartition(n_parts, "i")`` and a ``mapInArrow``
+      scatter (:func:`_to_slices`), then one pickled row per slice
+      through ``.rdd`` (:func:`_reassemble`).  Output batches are chunked
+      ≤64 slices so no RecordBatch approaches Arrow's 2 GiB int32-offset
+      binary limit.  This reader stays for computed coords: packing per
+      target partition inside ``mapInArrow`` and then ``partitionBy``,
+      instead of the row shuffle, made the slab build slower on every
+      input measured (0.57–0.75 s → 0.65–1.01 s on 4 cores; ROADMAP
+      direction 3), because the rows still reach Python one Arrow batch
+      at a time through the JVM.
     """
-    _, sj, sk = shape
-    packed = (
-        coords.select("i", "j", "k", "v")
-        .repartition(n_parts, "i")
-        .mapInArrow(partial(_to_slices, sj=sj, sk=sk), "id long, payload binary")
-    )
+    return _slabs(coords, shape, n_parts, persist, _footers(coords))
 
-    # .rdd here is partition-preserving (no shuffle); each RDD partition
-    # reassembles exactly one slab group.  persist=False for single-pass
-    # consumers (tensor_slices) — only the ALS loop re-reads slabs.
-    rdd = packed.rdd.mapPartitions(partial(_reassemble, sj=sj, sk=sk))
+
+def _shape_and_slabs(coords: DataFrame, n_parts: int, persist: bool = True):
+    """:func:`tensor_shape` and :func:`build_slices` on one footer read."""
+    footers = _footers(coords)
+    shape = _shape(coords, footers)
+    return shape, _slabs(coords, shape, n_parts, persist, footers)
+
+
+def _slabs(
+    coords: DataFrame,
+    shape: tuple[int, int, int],
+    n_parts: int,
+    persist: bool,
+    footers: ParquetFooters | None,
+):
+    _, sj, sk = shape
+    as_long = _parquet_hash(coords, footers)
+    if as_long is None:
+        packed = (
+            coords.select(*_COORDS)
+            .repartition(n_parts, "i")
+            .mapInArrow(partial(_to_slices, sj=sj, sk=sk), "id long, payload binary")
+        )
+        # .rdd here is partition-preserving (no shuffle); each RDD partition
+        # reassembles exactly one slab group.
+        rdd = packed.rdd.mapPartitions(partial(_reassemble, sj=sj, sk=sk))
+    else:
+        sc = coords.sparkSession.sparkContext
+        groups = footers.row_groups
+        rdd = (
+            sc.parallelize(groups, max(1, min(len(groups), sc.defaultParallelism)))
+            .mapPartitions(partial(_read_groups, n_parts=n_parts, as_long=as_long))
+            .partitionBy(n_parts, _partition_id)
+            .mapPartitions(partial(_slab_of_blocks, sj=sj, sk=sk))
+        )
+    # persist=False for single-pass consumers (tensor_slices) — only the
+    # ALS loop re-reads slabs.
     if persist:
         rdd = rdd.persist(StorageLevel.MEMORY_AND_DISK)
     return rdd
@@ -347,9 +515,8 @@ def _cp_als(
     reconstruction pass."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be at least 1, got {max_iter}")
-    shape = tensor_shape(coords)
+    shape, slabs = _shape_and_slabs(coords, n_parts)
     si, sj, sk = shape
-    slabs = build_slices(coords, shape, n_parts)
 
     rng = np.random.default_rng(seed)
     if not distributed:
@@ -557,8 +724,7 @@ def tensor_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     "What's wrong" #3: the old O(I)-row driver collect was a driver OOM at
     the 1e8-slice scale the distributed-A path targets)."""
     coords = _coords(spark, sf_dir)
-    shape = tensor_shape(coords)
-    slabs = build_slices(coords, shape, n_parts=8, persist=False)
+    _, slabs = _shape_and_slabs(coords, n_parts=8, persist=False)
     meta = slabs.flatMap(
         lambda it: [
             (
@@ -676,10 +842,9 @@ def tucker_hosvd(
     Driver traffic: J² + K² + (r2r3)² + r1·r2·r3 floats TOTAL, independent
     of I.  The big factor A is returned as distributed (ids, rows) blocks,
     exactly like CPModelDist's distributed-A variant."""
-    shape = tensor_shape(coords)
+    shape, slabs = _shape_and_slabs(coords, n_parts)
     si, sj, sk = shape
     r1, r2, r3 = (min(ranks[0], si), min(ranks[1], sj), min(ranks[2], sk))
-    slabs = build_slices(coords, shape, n_parts=n_parts)
 
     def gram_seq(acc, item):
         _, x = item  # (m, J, K)

@@ -269,10 +269,10 @@ def test_shape_from_footer_matches_aggregate(spark, tmp_path, make, from_footer)
     any other frame, footers without statistics or a file the driver
     cannot open fall back to the aggregate.  Both give the aggregate's
     shape."""
-    from paraslice_spark.sources.io import parquet_int_bounds
+    from paraslice_spark.sources.io import parquet_footers
 
     coords = make(spark, tmp_path, _planted_coords(spark, si=13, sj=7, sk=9, seed=43))
-    assert (parquet_int_bounds(coords, ("i", "j", "k")) is not None) == from_footer
+    assert (parquet_footers(coords, ("i", "j", "k")) is not None) == from_footer
     shape, jobs = _jobs_in_group(
         spark.sparkContext, f"shape-{make.__name__}", lambda: tensor_shape(coords)
     )
@@ -476,10 +476,10 @@ def test_tucker_releases_its_broadcasts(spark, broadcasts):
         np.testing.assert_array_equal(a, b)
 
 
-def test_build_slices_ships_module_level_kernels(spark, monkeypatch):
-    """Both slab-build kernels are pickled by reference, so the slab
-    stage's Python workers import the package and with it the worker
-    set-up patch (``paraslice_spark.pyworker``)."""
+def test_build_slices_ships_module_level_kernels(spark, tmp_path, monkeypatch):
+    """The slab-build kernels of both readers are pickled by reference, so
+    the slab stages' Python workers import the package and with it the
+    worker set-up patch (``paraslice_spark.pyworker``)."""
     import pickle
 
     from pyspark import RDD
@@ -503,6 +503,22 @@ def test_build_slices_ships_module_level_kernels(spark, monkeypatch):
     for f in shipped:
         pickle.dumps(f)  # the stdlib pickles functions only by reference
 
+    # the parquet reader: two partial-bound kernels and the partition function
+    real_partition_by = RDD.partitionBy
+
+    def partition_by(self, n, func, *args, **kwargs):
+        shipped.append(func)
+        return real_partition_by(self, n, func, *args, **kwargs)
+
+    monkeypatch.setattr(RDD, "partitionBy", partition_by)
+    shipped.clear()
+    on_disk = spark.read.parquet(_write_parquet(coords, tmp_path / "c.parquet"))
+    build_slices(on_disk, tensor_shape(on_disk), n_parts=2, persist=False)
+    names = [getattr(f, "func", f).__name__ for f in shipped]
+    assert names == ["_read_groups", "_partition_id", "_slab_of_blocks"]
+    for f in shipped:
+        pickle.dumps(f)
+
 
 def test_tucker_declared_query_runs(spark):
     from paraslice_spark.registry import QUERIES
@@ -511,3 +527,201 @@ def test_tucker_declared_query_runs(spark):
     rows = df.collect()
     assert len(rows) == 27  # 3x3x3 core
     assert all(r["core_abs"] >= 0 for r in rows)
+
+
+# --------------------------------------------------------------------------
+# The two slab readers (build_slices)
+# --------------------------------------------------------------------------
+
+_HASH_VALUES = {
+    "short": [0, 1, -1, -(2**15), 2**15 - 1],
+    "int": [0, 1, -1, -(2**31), 2**31 - 1],
+    "long": [0, 1, -1, -(2**31), 2**31 - 1, 2**31, -(2**63), 2**63 - 1],
+}
+
+
+@pytest.mark.parametrize("dtype", sorted(_HASH_VALUES))
+def test_spark_partition_matches_spark_hash(spark, dtype):
+    """The parquet reader's numpy Murmur3 sends every value to the
+    partition Spark's ``repartition(n, "i")`` picks, ``pmod(hash(i), n)``."""
+    from paraslice_spark.operators.tensor import _spark_partition
+
+    edges = _HASH_VALUES[dtype]
+    lo, hi = min(edges), max(edges)
+    rng = np.random.default_rng(59)
+    values = edges + [int(x) for x in rng.integers(lo, hi, 500, endpoint=True)]
+    ns = (1, 2, 3, 4, 7, 8)
+    rows = (
+        spark.createDataFrame([(x,) for x in values], f"x {dtype}")
+        .select("x", *[F.expr(f"pmod(hash(x), {n})") for n in ns])
+        .collect()
+    )
+    x = np.array([r[0] for r in rows], dtype={"short": np.int16, "int": np.int32}.get(dtype, np.int64))
+    for c, n in enumerate(ns, start=1):
+        want = np.array([r[c] for r in rows])
+        np.testing.assert_array_equal(_spark_partition(x, n, dtype == "long"), want)
+
+
+def _shuffled_coords(si=40, sj=3, sk=5, seed=61):
+    """A dense tensor's coords in seeded random row order, so each slice's
+    rows spread over row groups and files."""
+    rng = np.random.default_rng(seed)
+    i, j, k = (a.ravel() for a in np.indices((si, sj, sk)))
+    order = rng.permutation(len(i))
+    return i[order], j[order], k[order], rng.standard_normal(len(i))
+
+
+def _coords_table(i, j, k, v, int_type):
+    import pyarrow as pa
+
+    return pa.table({"i": pa.array(i, int_type), "j": pa.array(j, int_type),
+                     "k": pa.array(k, int_type), "v": pa.array(v, pa.float64())})
+
+
+def _row_groups(spark, tmp_path, int_type):
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "c.parquet")
+    pq.write_table(_coords_table(*_shuffled_coords(), int_type), path, row_group_size=70)
+    assert pq.read_metadata(path).num_row_groups > 1
+    return spark.read.parquet(path)
+
+
+def _int32_row_groups(spark, tmp_path):
+    import pyarrow as pa
+
+    return _row_groups(spark, tmp_path, pa.int32())
+
+
+def _int64_row_groups(spark, tmp_path):
+    import pyarrow as pa
+
+    return _row_groups(spark, tmp_path, pa.int64())
+
+
+def _three_files_one_empty(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = _coords_table(*_shuffled_coords(), pa.int32())
+    for n, (lo, hi) in enumerate(((0, 250), (250, 250), (250, table.num_rows))):
+        pq.write_table(table.slice(lo, hi - lo), str(tmp_path / f"p{n}.parquet"), row_group_size=90)
+    return spark.read.parquet(str(tmp_path))
+
+
+def _partition_slabs(slabs):
+    """Each partition's slab as (ids, X bytes), in partition order."""
+    return [[(ids.tolist(), x.tobytes()) for ids, x in part] for part in slabs.glom().collect()]
+
+
+@pytest.fixture
+def arrow_calls(spark, monkeypatch):
+    """Every ``mapInArrow`` call, i.e. every slab build by the DataFrame reader."""
+    frame = type(spark.range(1))
+    calls = []
+    real = frame.mapInArrow
+
+    def map_in_arrow(self, *args, **kwargs):
+        calls.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "mapInArrow", map_in_arrow)
+    return calls
+
+
+@pytest.mark.parametrize("n_parts", [1, 3, 8])
+@pytest.mark.parametrize("make", [_int32_row_groups, _int64_row_groups, _three_files_one_empty])
+def test_parquet_and_dataframe_slabs_identical(spark, tmp_path, arrow_calls, make, n_parts):
+    """The parquet reader puts the same slices in the same partitions as
+    the DataFrame reader's hash shuffle, in the same order, byte for byte."""
+    coords = make(spark, tmp_path)
+    shape = tensor_shape(coords)
+    from_parquet = _partition_slabs(build_slices(coords, shape, n_parts, persist=False))
+    assert arrow_calls == []
+    projected = coords.select("i", "j", "k", "v")  # not a bare scan: the DataFrame reader
+    from_frame = _partition_slabs(build_slices(projected, shape, n_parts, persist=False))
+    assert len(arrow_calls) == 1
+    assert from_parquet == from_frame
+    assert len(from_parquet) == n_parts
+    assert sorted(i for part in from_parquet for ids, _ in part for i in ids) == list(range(shape[0]))
+
+
+def _decimal_value(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from decimal import Decimal
+
+    i, j, k, v = _shuffled_coords()
+    table = _coords_table(i, j, k, v, pa.int32()).set_column(
+        3, "v", pa.array([Decimal(f"{x:.3f}") for x in v], pa.decimal128(9, 3))
+    )
+    pq.write_table(table, str(tmp_path / "c.parquet"))
+    return spark.read.parquet(str(tmp_path / "c.parquet"))
+
+
+def _null_i(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    i, j, k, v = _shuffled_coords()
+    table = _coords_table(i, j, k, v, pa.int32()).set_column(
+        0, "i", pa.array([None] + i[1:].tolist(), pa.int32())
+    )
+    pq.write_table(table, str(tmp_path / "c.parquet"))
+    return spark.read.parquet(str(tmp_path / "c.parquet"))
+
+
+@pytest.mark.parametrize(
+    "make", [_selected, _filtered, _from_sql, _decimal_value, _null_i]
+)
+def test_slab_build_falls_back_to_dataframe(spark, tmp_path, arrow_calls, make):
+    """Only a bare parquet scan with null-free integer ``i``/``j``/``k`` and
+    a non-decimal numeric ``v`` skips the DataFrame reader."""
+    if make in (_selected, _filtered, _from_sql):
+        coords = make(spark, tmp_path, _planted_coords(spark, seed=67))
+    else:
+        coords = make(spark, tmp_path)
+    build_slices(coords, (40, 3, 5), n_parts=3, persist=False)
+    assert len(arrow_calls) == 1
+
+
+def test_parquet_slab_build_runs_no_sql(spark, tmp_path):
+    """Building from parquet starts no SQL execution and its jobs read no
+    input through the JVM: the row groups go straight to Python tasks.
+    The DataFrame reader's scan stage reads the file in the JVM."""
+    sc = spark.sparkContext
+    sql = spark._jsparkSession.sharedState().statusStore()
+    store = sc._jsc.sc().statusStore()
+
+    def build(coords, group):
+        shape = tensor_shape(coords)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = sql.executionsCount()
+        _jobs_in_group(
+            sc, group, lambda: build_slices(coords, shape, n_parts=3, persist=False).count()
+        )
+        stages = [
+            s for j in sc.statusTracker().getJobIdsForGroup(group)
+            for s in sc.statusTracker().getJobInfo(j).stageIds
+        ]
+        read = sum(store.lastStageAttempt(s).inputBytes() for s in stages)
+        return sql.executionsCount() - before, read
+
+    coords = _int32_row_groups(spark, tmp_path)
+    assert build(coords, "slabs-parquet") == (0, 0)
+    assert build(coords.select("i", "j", "k", "v"), "slabs-frame")[1] > 0
+
+
+@pytest.mark.parametrize("n_parts", [1, 3])
+@pytest.mark.parametrize("source", ["frame", "parquet"])
+def test_duplicate_cells_are_summed(spark, tmp_path, source, n_parts):
+    """Rows naming the same (i, j, k) cell add up in the slab, the SUM rule
+    of tensor_build_coords, instead of the shuffle order picking one."""
+    rows = [
+        (i, j, k, float(1 + i + j + k)) for i in range(6) for j in range(3) for k in range(4)
+    ] + [(2, 1, 3, 100.0)]
+    coords = spark.createDataFrame(rows, "i long, j long, k long, v double")
+    if source == "parquet":
+        coords = spark.read.parquet(_write_parquet(coords, tmp_path / "c.parquet"))
+    slabs = build_slices(coords, tensor_shape(coords), n_parts, persist=False)
+    assert slabs.map(lambda it: float(it[1].sum())).sum() == sum(r[3] for r in rows) == 532.0
