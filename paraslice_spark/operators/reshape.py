@@ -22,7 +22,7 @@ from paraslice_spark.functions.canon import (
     rnd,
     split_label,
 )
-from paraslice_spark.memo import memo
+from paraslice_spark.memo import _free_local_checkpoint, memo
 from paraslice_spark.registry import query
 from paraslice_spark.session import vocab_broadcast
 from paraslice_spark.sources.io import load_tables
@@ -3545,7 +3545,7 @@ def watermark_late_counts(ev: DataFrame) -> DataFrame:
 def _wm_late_core(e: DataFrame, order_cols: list) -> DataFrame:
     """Three-level strict-prefix-max + the 10-min eviction rule, grouped
     per hour window — the shared engine of both declared ST4 audits."""
-    wm = _wm_prefix_frame(e, order_cols)
+    wm, _ = _wm_prefix_frame(e, order_cols)
     late = (F.col("prefix_max") - WM_DELAY_NS) >= F.col("hr_end")
     return wm.groupBy("hr").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -3553,10 +3553,13 @@ def _wm_late_core(e: DataFrame, order_cols: list) -> DataFrame:
     )
 
 
-def _wm_prefix_frame(e: DataFrame, order_cols: list) -> DataFrame:
+def _wm_prefix_frame(
+    e: DataFrame, order_cols: list
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
     """Shared three-level distributed strict-prefix-max: appends
     ``prefix_max`` (max ts_ns strictly before each row in arrival order)
-    to ``e``.
+    to ``e``.  Also returns the two inner non-eager checkpoints, which a
+    caller that checkpoints the frame itself frees once that is built.
 
     ``e`` must carry (ts_ns, hr, hr_end, b1, b2) plus the arrival-order
     columns.  CONTRACT: (b1, b2) are pure functions of the order key,
@@ -3605,11 +3608,12 @@ def _wm_prefix_frame(e: DataFrame, order_cols: list) -> DataFrame:
             F.greatest(F.col("off1"), F.col("off2")).alias("off"),
         )
     )
-    return (
+    wm = (
         e.join(l1_off, "b1")
         .withColumn("inb", F.max("ts_ns").over(w_in))
         .withColumn("prefix_max", F.greatest("inb", "off"))
     )
+    return wm, (e, l1)
 
 
 @query(
@@ -3677,9 +3681,13 @@ def _replay_wm_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         ev = load_tables(spark, sf_dir)["events"]
-        return _wm_prefix_frame(
-            _replay_arrival_frame(ev), ["h", "event_id"]
-        ).localCheckpoint(eager=True)
+        wm, inner = _wm_prefix_frame(_replay_arrival_frame(ev), ["h", "event_id"])
+        wm = wm.localCheckpoint(eager=True)
+        # the memo owns only the outer checkpoint: free the inner ones now,
+        # or only Python GC and Spark's ContextCleaner ever release them
+        for df in inner:
+            _free_local_checkpoint(df)
+        return wm
 
     return memo(spark, sf_dir, "replay_wm", build)
 
@@ -3900,7 +3908,7 @@ def events_session_watermark_audit(
         F.expr("arr div 900000000000").alias("b1"),
         F.expr("arr div 900000000000 div 64").alias("b2"),
     )
-    wm = _wm_prefix_frame(e, ["arr", "event_id"])
+    wm, _ = _wm_prefix_frame(e, ["arr", "event_id"])
     kept = (
         F.when(
             F.col("prefix_max") - EP_WM_DELAY_NS

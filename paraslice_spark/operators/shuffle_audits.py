@@ -113,10 +113,10 @@ def stats_partition_sizing_audit(
     the broadcast 4-row sweep list.  At 100 TB the census is the only
     data-proportional stage and is itself a map-combined count."""
     li = load_tables(spark, sf_dir)["lineitem"]
-    # r15: spread_scan was A/B-tested here and REJECTED — the single md5
-    # is too light to amortize the round-robin exchange's serialization
-    # (measured 2.7 s → 4.0 s); only the partial-agg audit's md5+stack+
-    # census projection clears that bar.
+    # r15: a round-robin spread of the scan (sources.io.spread_scan) was
+    # A/B-tested here and REJECTED — the single md5 is too light to
+    # amortize the exchange's serialization (measured 2.7 s → 4.0 s); only
+    # the partial-agg audit's md5+stack+census projection clears that bar.
     census = (
         li.select(
             (
@@ -253,7 +253,7 @@ def stats_bucket_colocation_audit(
     full-outer census merge, and O(128 x 3) sweep arithmetic against
     the broadcast 3-row sweep list."""
     t = load_tables(spark, sf_dir)
-    # r15: spread_scan rejected here for the same reason as the
+    # r15: no spread_scan here, for the same reason as the
     # partition-sizing census (single-md5 map side — the spread exchange
     # costs more than it parallelizes; A/B-measured)
     lc = (
@@ -408,15 +408,16 @@ def stats_partial_agg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # likewise rides as a 0..3 kid and maps back to its string in the
     # 4-row final select.  The oracle still compares string renderings —
     # distinct cardinality is representation-independent.
-    # ... and the md5+stack projection below runs before the census
-    # exchange — spread the single-row-group local scan across cores
-    # first (no-op at scale; see sources.io.spread_scan); the spread
-    # exchange carries only the five key columns.
+    # ... and the md5+stack projection below (~10 us per row single-core)
+    # runs before the census exchange — spread it at ~15k rows (~0.15 s)
+    # per task (see sources.io.spread_scan); the spread exchange carries
+    # only the five key columns.
     base = spread_scan(
         li.select(
             "l_orderkey", "l_partkey", "l_returnflag", "l_suppkey",
             "l_linenumber",
-        )
+        ),
+        15_000,
     ).select(
         F.col("l_orderkey").alias("g0"),
         F.col("l_partkey").alias("g1"),

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from paraslice_spark.functions.canon import md5_u32, md5_u32_sql, rnd
 from paraslice_spark.memo import _free_local_checkpoint, memo
 from paraslice_spark.registry import query
-from paraslice_spark.sources.io import load_tables
+from paraslice_spark.sources.io import load_tables, spread_scan
 
 _N_QUERIES = 5  # vec_id < 5 are the query vectors
 _TOP_K = 5
@@ -47,22 +47,6 @@ def _l2_dist(a, b):
     )
 
 
-def _emb_base_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Scale-adaptive partition count for the embeddings base (r16, guide
-    §2/§6): the single parquet file scans as ONE split at every fixture SF
-    (openCost-bound), so every downstream Arrow kernel (signatures,
-    quantization, assignment) ran 1-task regardless of core count —
-    measured flat 8-vs-32-core ratios on the sf1 heavy arm.  Target ~2000
-    vectors per partition (compute-bound kernels want row granularity, not
-    bytes), capped at spark.sql.shuffle.partitions (the knob clusters
-    already size); the row count comes from the parquet FOOTER (driver-side
-    metadata read, no job).  At sf0.1 (2000 rows) this yields 1 — the
-    fixture plans are byte-identical to the pre-r16 shape."""
-    from paraslice_spark.sources.io import scaled_scan_partitions
-
-    return scaled_scan_partitions(spark, sf_dir, "embeddings", 2000)
-
-
 def _emb_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eagerly-checkpointed (vec_id, emb-as-double) base shared by the ANN
     queries that re-read it for quantizer fit + assignment + verify passes
@@ -72,14 +56,13 @@ def _emb_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         e = load_tables(spark, sf_dir)["embeddings"]
         base = e.select("vec_id", _as_double(F.col("embedding")).alias("emb"))
-        n_part = _emb_base_partitions(spark, sf_dir)
-        if n_part > 1:
-            # deterministic hash placement; all hash-oracled consumers are
-            # row-local or integer-exact (partition-order-proof), and the
-            # float k-means fits feed rows-only queries with fixed top-k
-            # row counts — see OPTIMIZATION_r16.md
-            base = base.repartition(n_part, F.col("vec_id"))
-        return base.localCheckpoint(eager=True)
+        # every downstream Arrow kernel (signatures, quantization,
+        # assignment) runs on this base's partitions.  Hash placement is
+        # deterministic; all hash-oracled consumers are row-local or
+        # integer-exact (partition-order-proof), and the float k-means fits
+        # feed rows-only queries with fixed top-k row counts — see
+        # OPTIMIZATION_r16.md
+        return spread_scan(base, 2000, "vec_id").localCheckpoint(eager=True)
 
     return memo(spark, sf_dir, "emb_base", build)
 
@@ -834,16 +817,9 @@ def _minhash_base_cached(
     invocation."""
 
     def build() -> tuple[DataFrame, DataFrame]:
-        from paraslice_spark.sources.io import scaled_scan_partitions
-
-        docs = load_tables(spark, sf_dir)["documents"]
-        # r16 (guide §2/§6): the single-file scan runs the whole shingle
-        # explode + md5 dictionary + 16-transform map 1-task at any SF —
-        # spread it scale-adaptively before the compute (integer-exact
-        # md5-affine signatures: partition-order-proof)
-        n_part = scaled_scan_partitions(spark, sf_dir, "documents", 500)
-        if n_part > 1:
-            docs = docs.repartition(n_part, F.col("doc_id"))
+        # spread the shingle explode + md5 dictionary + 16-transform map
+        # (integer-exact md5-affine signatures: partition-order-proof)
+        docs = spread_scan(load_tables(spark, sf_dir)["documents"], 500, "doc_id")
         sh = shingle_docs(docs).localCheckpoint(eager=True)
         sigs = _minhash_signatures(sh, _N_SIG).localCheckpoint(eager=True)
         return sh, sigs
@@ -1015,15 +991,9 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[Data
     share a prefix gram, so the candidate join runs on the prefix inverted
     index, then the exact intersection verifies candidates only. Every step
     is an equi-join/groupBy shuffle — no all-pairs scan anywhere."""
-    from paraslice_spark.sources.io import scaled_scan_partitions
-
-    d = load_tables(spark, sf_dir)["documents"]
-    # r16 (guide §2/§6): spread the bigram explode map phase off the
-    # 1-split scan (exact gram counts + value-ordered gid assignment:
-    # partition-order-proof)
-    n_part = scaled_scan_partitions(spark, sf_dir, "documents", 500)
-    if n_part > 1:
-        d = d.repartition(n_part, F.col("doc_id"))
+    # spread the bigram explode map phase (exact gram counts + value-ordered
+    # gid assignment: partition-order-proof)
+    d = spread_scan(load_tables(spark, sf_dir)["documents"], 500, "doc_id")
     words = F.split("text", " ")
     nw = F.size(words)
     bigrams = F.zip_with(
@@ -1656,14 +1626,9 @@ def _simhash_table_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash): 64-bit SimHash per doc from md5-derived per-token
     bit votes (see dedup_simhash_bands docstring for the contract)."""
-    from paraslice_spark.sources.io import scaled_scan_partitions
-
-    d = load_tables(spark, sf_dir)["documents"]
-    # r16 (guide §2/§6): spread the tokenize + md5 + lane-pack map phase
-    # off the 1-split scan (integer bit-vote sums: partition-order-proof)
-    n_part = scaled_scan_partitions(spark, sf_dir, "documents", 500)
-    if n_part > 1:
-        d = d.repartition(n_part, F.col("doc_id"))
+    # spread the tokenize + md5 + lane-pack map phase (integer bit-vote
+    # sums: partition-order-proof)
+    d = spread_scan(load_tables(spark, sf_dir)["documents"], 500, "doc_id")
     words = F.explode(F.split("text", " "))
     hexs = F.md5("w")
     h64 = F.shiftleft(F.conv(F.substring(hexs, 1, 8), 16, 10).cast("long"), 32).bitwiseOR(
@@ -2032,14 +1997,11 @@ def embedding_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned exactly once.
 
     r16 heavy-arm fix: the posexplode + (label, dim) partial agg ran
-    1-task on the single-file scan at any SF; spread via
-    `_emb_base_partitions` (needs `label`, so the raw scan is
-    repartitioned rather than riding the vec-only memo — the helper
-    returns 1 at fixture SFs, keeping those plans byte-identical)."""
-    e = load_tables(spark, sf_dir)["embeddings"]
-    n_part = _emb_base_partitions(spark, sf_dir)
-    if n_part > 1:
-        e = e.repartition(n_part, F.col("vec_id"))
+    1-task on the single-file scan at any SF; spread by `spread_scan`
+    like the `_emb_base_cached` memo (needs `label`, so the raw scan is
+    spread rather than riding the vec-only memo — no spread at fixture
+    SFs, keeping those plans byte-identical)."""
+    e = spread_scan(load_tables(spark, sf_dir)["embeddings"], 2000, "vec_id")
     s = (
         e.select("label", F.posexplode(_as_double(F.col("embedding"))))
         .select(
@@ -3692,8 +3654,8 @@ def embedding_quant_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     r16 heavy-arm fix: ride the shared `_emb_base_cached` checkpoint —
     the direct single-file scan ran the ~8 per-row integer array folds
     as ONE task at any SF (extended sf1 arm: 10.6 s at 32 cores, c8/c32
-    ratio 0.59 — serial-bound); the memo is scale-adaptively
-    repartitioned (`_emb_base_partitions`), so the fold map parallelizes
+    ratio 0.59 — serial-bound); the memo is spread by `spread_scan`
+    when the scan reads in too few tasks, so the fold map parallelizes
     while fixture-SF outputs stay hash-identical (memo emb is the same
     float→double cast this query applied itself)."""
     e = _emb_base_cached(spark, sf_dir)

@@ -25,7 +25,7 @@ from paraslice_spark.functions.canon import (
 from paraslice_spark.memo import _free_local_checkpoint, memo
 from paraslice_spark.registry import query
 from paraslice_spark.session import vocab_broadcast
-from paraslice_spark.sources.io import load_tables
+from paraslice_spark.sources.io import load_tables, spread_scan
 
 #: marker token sets for the language-ID heuristic (vocabulary is identical
 #: across fixture langs — verified — so this is a deterministic scoring rule,
@@ -704,15 +704,9 @@ def _decontaminate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline_dataset_build share one gram join per session+sf."""
 
     def build() -> DataFrame:
-        from paraslice_spark.sources.io import scaled_scan_partitions
-
-        d = load_tables(spark, sf_dir)["documents"]
-        # r16 (guide §2/§6): spread the train-side gram explode off the
-        # 1-split scan (exact gram joins: partition-order-proof) — same
-        # fix as the minhash/simhash/ngram memo builds
-        n_part = scaled_scan_partitions(spark, sf_dir, "documents", 500)
-        if n_part > 1:
-            d = d.repartition(n_part, F.col("doc_id"))
+        # spread the train-side gram explode (exact gram joins:
+        # partition-order-proof) — same as the minhash/simhash/ngram builds
+        d = spread_scan(load_tables(spark, sf_dir)["documents"], 500, "doc_id")
         pairs = decontaminate_pairs(
             d.where(F.col("source") != "src0"),
             bench_gram_index(d.where(F.col("source") == "src0")),
@@ -903,19 +897,12 @@ def text_decontaminate_gram_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     bench_idx = bench.withColumn(
         "n", F.count(F.lit(1)).over(Window.partitionBy("bench_doc", "gn"))
     )
-    # The fixture is ONE parquet file -> one input partition, and the
-    # 4-size explode expression costs ~6 us/row single-core (measured
-    # 6.2 s at sf0.1) — spread the docs across cores BEFORE exploding
-    # (a shuffle of doc rows, cheap; at 100 TB input splits provide this
-    # parallelism for free and the repartition coalesces away under AQE).
-    train = (
-        _decon_sweep_grams(
-            d.where(F.col("source") != "src0").repartition(
-                spark.sparkContext.defaultParallelism
-            )
-        )
-        .select(F.col("doc_id").alias("train_doc"), "gn", "gram")
-    )
+    # The 4-size explode costs ~6 us per gram row single-core (6.2 s at
+    # sf0.1, ~1.4 ms per doc), so spread the docs BEFORE exploding: ~100
+    # docs (~0.1 s) per task.  A scan that already splits is left as is.
+    train = _decon_sweep_grams(
+        spread_scan(d.where(F.col("source") != "src0"), 100)
+    ).select(F.col("doc_id").alias("train_doc"), "gn", "gram")
     flagged = (
         train.join(F.broadcast(bench_idx), ["gn", "gram"])
         .groupBy("gn", "train_doc", "bench_doc", "n")

@@ -6,6 +6,11 @@ memoization means a suite of queries reads each parquet footer once and
 shares the same DataFrame lineage — at 100 TB this is also the layer where
 a real deployment would swap in a catalog/metastore without touching any
 operator code.
+
+Parquet footers are read on the driver here and nowhere else, by one walk
+(``_footers``): ``parquet_footers`` sizes CP-ALS inputs from them, and
+``spread_scan`` — the engine's one rule for spreading a scan that reads
+in too few tasks — sizes its repartition from their row counts.
 """
 
 from __future__ import annotations
@@ -32,32 +37,16 @@ TABLES = (
 )
 
 
-def scaled_scan_partitions(
-    spark: SparkSession, sf_dir: str, table: str, rows_per_partition: int
-) -> int:
-    """Scale-adaptive partition count for a map-heavy pipeline over a
-    fixture table (r16, guide §2/§6): each fixture table is ONE parquet
-    file, which scans as one (openCost-bound) split at every SF — so any
-    expensive map phase built directly on the scan (shingle md5, tokenize
-    votes, gram explode, Arrow kernels) ran 1-task regardless of core
-    count; measured flat 8-vs-32-core ratios on the sf1 heavy arm.  The
-    row count comes from the parquet FOOTER (driver-side metadata read, no
-    job); the result is clamped to spark.sql.shuffle.partitions — the knob
-    clusters already size.  Callers skip the repartition entirely when
-    this returns 1, keeping small-SF plans byte-identical.  An unreadable
-    footer also gives 1: the fallback must leave the plan as it was, never
-    spread an unknown (possibly tiny) table over every shuffle partition."""
-    import pyarrow as pa
+def _footers(files: list[str]):
+    """Yield ``(uri, footer metadata)`` for each parquet file URI, read on
+    the driver with no Spark job.  Raises ``OSError`` or
+    ``pyarrow.ArrowException`` for a file it cannot open or parse."""
     import pyarrow.parquet as pq
+    from pyarrow import fs
 
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    try:
-        rows = pq.ParquetFile(
-            f"{sf_dir.rstrip('/')}/{table}.parquet"
-        ).metadata.num_rows
-    except (OSError, pa.ArrowException):
-        return 1
-    return max(1, min(cap, rows // rows_per_partition))
+    for uri in files:
+        filesystem, path = fs.FileSystem.from_uri(uri)
+        yield uri, pq.read_metadata(path, filesystem=filesystem)
 
 
 class ParquetFooters(NamedTuple):
@@ -89,9 +78,7 @@ def parquet_footers(
     and 540 ms for 2048, against 330 ms, 840 ms and 2.1 s for a min/max
     aggregate job, so the read is not capped by file count."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from py4j.protocol import Py4JError
-    from pyarrow import fs
 
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -107,9 +94,7 @@ def parquet_footers(
     nulls: list = [0] * len(bounded)
     row_groups = []
     try:
-        for uri in files:
-            filesystem, path = fs.FileSystem.from_uri(uri)
-            meta = pq.read_metadata(path, filesystem=filesystem)
+        for uri, meta in _footers(files):
             paths = [meta.schema.column(c).path for c in range(meta.num_columns)]
             if any(c not in paths for c in bounded + present):
                 return None
@@ -134,6 +119,49 @@ def parquet_footers(
     except (OSError, pa.ArrowException):
         return None
     return ParquetFooters(lo, hi, nulls, row_groups)
+
+
+def spread_scan(df: DataFrame, rows_per_partition: int, *keys) -> DataFrame:
+    """``df`` repartitioned into ``n`` partitions before an expensive
+    per-row map (md5 hashing, wide explodes, Arrow kernels) — hashed on
+    ``keys``, round-robin with none — or ``df`` itself when the scan
+    already splits, where
+
+        n = min(spark.sql.shuffle.partitions, footer rows // rows_per_partition)
+
+    and footer rows is the row count in the parquet footers of
+    ``df.inputFiles()``.  Each fixture table is one single-row-group file,
+    which scans as one task at every scale factor, so a map phase built
+    on the scan ran 1-task however many cores there were (r15: the
+    partial-agg census 6.3 s → 2.7 s once spread over 32 tasks at sf0.1;
+    r16: flat 8-vs-32-core ratios on the sf1 heavy arm).
+
+    ``df`` comes back unchanged when ``n <= 1`` (a small or unknown table
+    is never spread) or when its scan already reads in ``n`` or more
+    partitions that hold rows (a table stored as many files or row groups
+    gets no extra pass).  A parquet split reads whole row groups, so at
+    most one split per row group holds rows: a one-group file cut into
+    many byte-range splits still reads in one task and is spread.  The
+    footers are read first (~1 ms); the partition probe plans the frame
+    (53–72 ms on 4 cores) and runs only when the footers ask for more
+    than one partition and show at least that many row groups, so a
+    one-group fixture file is never probed.  A py4j error, an unreadable file or a
+    non-parquet input also leaves ``df`` unchanged.  The exchange carries
+    every column of ``df``, so narrow it first where the map allows."""
+    import pyarrow as pa
+    from py4j.protocol import Py4JError
+
+    try:
+        cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        metas = [meta for _, meta in _footers(df.inputFiles())]
+        n = min(cap, sum(m.num_rows for m in metas) // rows_per_partition)
+        # a split reads whole row groups: only one split per group has rows
+        groups = sum(m.num_row_groups for m in metas)
+        if n <= 1 or (groups >= n and df.rdd.getNumPartitions() >= n):
+            return df
+    except (Py4JError, OSError, pa.ArrowException):
+        return df
+    return df.repartition(n, *keys)
 
 
 def _repair_events(df: DataFrame) -> DataFrame:
@@ -188,31 +216,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         return out
 
     return memo(spark, sf_dir, "tables", build)
-
-
-def spread_scan(df: DataFrame) -> DataFrame:
-    """Fan a NARROW projection out to the session's parallelism before an
-    expensive per-row projection (md5 hashing, wide explodes) — but only
-    when the source offers fewer input splits than cores.
-
-    Rationale (r15, optimization guide §2/§6): the local fixtures are
-    single-row-group parquet files, so every map-side expression before
-    the first exchange runs on ONE task regardless of
-    ``spark.sql.files.maxPartitionBytes`` (a parquet row group is
-    indivisible).  Measured at sf0.1: the partial-agg census build drops
-    6.3 s → 2.7 s once its md5+stack projection runs on 32 tasks.  At
-    real scale the scan already provides >= cores splits, the partition
-    probe sees that, and this is a NO-OP — no extra pass is ever added
-    to a 100 TB plan.  Callers must pass the minimal column set so the
-    round-robin exchange carries keys, not payloads (guide §2.3)."""
-    try:
-        n_in = df.rdd.getNumPartitions()
-        target = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        return df
-    if n_in >= target:
-        return df
-    return df.repartition(target)
 
 
 def sql_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -7,6 +7,7 @@ coming back."""
 from __future__ import annotations
 
 import ast
+import gc
 import pathlib
 from types import SimpleNamespace
 
@@ -145,6 +146,22 @@ def test_clear_all_releases_every_memo(spark):
     memo.clear_all()
     assert memo._entries == {}
     assert set(jsc.getPersistentRDDs()) - before == set()
+
+
+def test_replay_memo_frees_its_inner_checkpoints(spark):
+    """The replay_wm build frees the two inner checkpoints of its prefix
+    frame: with Python GC off (so nothing else reclaims them),
+    clear_all leaves no RDD of the build persisted."""
+    jsc = spark.sparkContext._jsc
+    memo.clear_all()
+    before = set(jsc.getPersistentRDDs())
+    gc.disable()
+    try:
+        QUERIES["events_watermark_late_replay"](spark, SF_SMALL).count()
+        memo.clear_all()
+        assert set(jsc.getPersistentRDDs()) - before == set()
+    finally:
+        gc.enable()
 
 
 def _module_level_cache_dicts(tree: ast.Module) -> list[str]:

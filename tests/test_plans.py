@@ -633,7 +633,8 @@ def test_watermark_replay_prefix_scan_decomposition(spark):
     from paraslice_spark.sources.io import load_tables
 
     ev = load_tables(spark, SF_SMALL)["events"]
-    p = plan(_wm_prefix_frame(_replay_arrival_frame(ev), ["h", "event_id"]))
+    wm, _ = _wm_prefix_frame(_replay_arrival_frame(ev), ["h", "event_id"])
+    p = plan(wm)
     wins = [ln for ln in p.splitlines() if "Window [" in ln]
     assert len(wins) == 3, p
     unpart = [ln for ln in wins

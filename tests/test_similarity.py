@@ -330,36 +330,3 @@ def test_ann_recall_default_plan_has_no_pair_join(spark, monkeypatch):
     monkeypatch.setenv(sim._ANN_COHORT_ENV, "3")
     p = plan(QUERIES["similarity_ann_recall"](spark, SF_SMALL))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" in p, p
-
-
-def test_emb_base_partitions_scale_adaptive(spark, tmp_path):
-    """r16: the embeddings base repartitions by footer row count (~2000
-    rows/partition, capped at shuffle partitions) so the Arrow kernel
-    stages parallelize on big corpora; at the fixture SFs the count is 1
-    and the plan stays byte-identical to the pre-r16 shape."""
-    from paraslice_spark.operators.similarity import _emb_base_partitions
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    assert _emb_base_partitions(spark, SF_SMALL) == 1
-    assert _emb_base_partitions(spark, "/root/testdata/sf0.1") == 1
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # a 6k-row single-file corpus targets 3 partitions — strictly between 1
-    # and the test cap (8), so this cannot be satisfied by the fallback
-    pq.write_table(
-        pa.table({"vec_id": list(range(6000))}),
-        str(tmp_path / "embeddings.parquet"),
-    )
-    assert _emb_base_partitions(spark, str(tmp_path)) == 3 != cap
-    # a corpus past the cap clamps to it
-    pq.write_table(
-        pa.table({"vec_id": list(range(2000 * (cap + 5)))}),
-        str(tmp_path / "embeddings.parquet"),
-    )
-    assert _emb_base_partitions(spark, str(tmp_path)) == cap
-    # an unreadable footer (missing file, or not parquet) falls back to 1,
-    # never raises: the caller then keeps its plan unspread
-    assert _emb_base_partitions(spark, str(tmp_path / "missing")) == 1
-    (tmp_path / "embeddings.parquet").write_bytes(b"not a parquet file")
-    assert _emb_base_partitions(spark, str(tmp_path)) == 1
