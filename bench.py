@@ -169,6 +169,57 @@ def artifact_path(here: str, cpus: int) -> str:
     return local
 
 
+def time_queries(spark, sf_dir: str, queries: dict, runs: int) -> dict:
+    """Run each query ``runs`` times in name order and return the file
+    artifact's per-query maps: ``queries`` (best of the runs, -1 when the
+    query raised), ``queries_runs`` (every run's seconds, in run order),
+    ``queries_run1``, ``memo_builds`` and ``steal_suspect_queries``."""
+    from paraslice_spark.memo import build_log
+
+    times: dict[str, float] = {}
+    all_runs: dict[str, list[float]] = {}
+    memo_builds: dict[str, list] = {}
+    noisy: dict[str, float] = {}
+    for name, fn in sorted(queries.items()):
+        cpu0 = cpu_sample()
+        n_built = len(build_log)
+        all_runs[name] = []
+        try:
+            for i in range(runs):
+                t0 = time.perf_counter()
+                materialize(fn(spark, sf_dir))
+                dt = time.perf_counter() - t0
+                all_runs[name].append(round(dt, 4))
+                if i == 0 and len(build_log) > n_built:
+                    memo_builds[name] = [
+                        [m, round(t, 4)] for m, _, t in build_log[n_built:]
+                    ]
+            times[name] = min(all_runs[name])
+            sp = steal_pct(cpu0, cpu_sample())
+            if sp is not None and sp >= 1.0:
+                # the query's measurement window saw hypervisor steal —
+                # its row is noise-suspect, self-documented (VERDICT r5 #7)
+                noisy[name] = sp
+            print(f"# {name}: {times[name]}s", file=sys.stderr)
+        except Exception as exc:  # a broken query must not kill the bench
+            times[name] = -1.0
+            print(f"# BENCH ERROR {name}: {exc}", file=sys.stderr)
+    return {
+        "queries": times,
+        # every run, not only the best: some sf0.1 queries still get faster
+        # at run 3, which the best-of-N alone hides
+        "queries_runs": all_runs,
+        # first-run seconds: for memoized families this carries the shared
+        # build the best-of-N replay hides (heavy-arm reading aid)
+        "queries_run1": {n: r[0] for n, r in all_runs.items() if r},
+        # per-query timings for memoized families are run-order-dependent:
+        # the query whose first run builds a memo pays for it, later
+        # consumers read the materialization
+        "memo_builds": memo_builds,
+        "steal_suspect_queries": noisy,
+    }
+
+
 def main() -> int:
     heavy = os.environ.get("PARASLICE_BENCH_HEAVY") == "1"
     sf_dir = os.environ.get(
@@ -178,7 +229,6 @@ def main() -> int:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     import paraslice_spark.operators  # noqa: F401
-    from paraslice_spark.memo import build_log
     from paraslice_spark.registry import QUERIES
     from paraslice_spark.session import get_session
     from paraslice_spark.sources.io import load_tables
@@ -203,41 +253,10 @@ def main() -> int:
     bench_queries = (
         {n: QUERIES[n] for n in HEAVY_ARM_QUERIES} if heavy else QUERIES
     )
-    times: dict[str, float] = {}
-    run1: dict[str, float] = {}
-    memo_builds: dict[str, list] = {}
-    noisy: dict[str, float] = {}
     t_suite = time.perf_counter()
     cpu_suite0 = cpu_sample()
-    for name, fn in sorted(bench_queries.items()):
-        best = float("inf")
-        cpu0 = cpu_sample()
-        n_built = len(build_log)
-        try:
-            for i in range(runs):
-                t0 = time.perf_counter()
-                materialize(fn(spark, sf_dir))
-                dt = time.perf_counter() - t0
-                if i == 0:
-                    # first-run seconds: for memoized families this carries
-                    # the shared build the best-of-N replay hides (heavy-arm
-                    # reading aid; file artifact only)
-                    run1[name] = round(dt, 4)
-                    if len(build_log) > n_built:
-                        memo_builds[name] = [
-                            [m, round(t, 4)] for m, _, t in build_log[n_built:]
-                        ]
-                best = min(best, dt)
-            times[name] = round(best, 4)
-            sp = steal_pct(cpu0, cpu_sample())
-            if sp is not None and sp >= 1.0:
-                # the query's measurement window saw hypervisor steal —
-                # its row is noise-suspect, self-documented (VERDICT r5 #7)
-                noisy[name] = sp
-            print(f"# {name}: {times[name]}s", file=sys.stderr)
-        except Exception as exc:  # a broken query must not kill the bench
-            times[name] = -1.0
-            print(f"# BENCH ERROR {name}: {exc}", file=sys.stderr)
+    timed = time_queries(spark, sf_dir, bench_queries, runs)
+    times = timed["queries"]
     wallclock = round(time.perf_counter() - t_suite, 4)
     # a query that raised is recorded as -1 and left out of the total, so a
     # failure would read as a faster suite: count failures as a headline
@@ -287,20 +306,14 @@ def main() -> int:
         "value": total,
         "n_errors": n_errors,
         "unit": "sec",
-        "queries": times,
+        **timed,
         "sf": sf,
         "cpus": cpus,
         "runs_per_query": runs,
         "wallclock_all_runs": wallclock,
         "suite_steal_pct": stdout_line["suite_steal_pct"],
-        "steal_suspect_queries": noisy,
         "sched_probe": sched,
         "queries_stage_norm": queries_stage_norm,
-        "queries_run1": run1,
-        # per-query timings for memoized families are run-order-dependent:
-        # the query whose first run builds a memo pays for it, later
-        # consumers read the materialization
-        "memo_builds": memo_builds,
     }
     print(json.dumps(stdout_line, separators=(",", ":")))
     # BENCH_r{N}.json keeps only the stdout tail, losing the front of the

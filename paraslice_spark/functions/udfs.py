@@ -17,6 +17,7 @@ from pyspark.sql.functions import pandas_udf, udf
 from pyspark.sql.types import DoubleType, StringType
 
 from paraslice_spark.functions.canon import rnd
+from paraslice_spark.pyworker import by_ref
 from paraslice_spark.registry import query
 from paraslice_spark.sources.io import load_tables
 
@@ -43,7 +44,7 @@ def normalize_name_pd():
         # strip(' ') to match SQL TRIM exactly (see _normalize_py)
         return s.str.strip(" ").str.lower().str.replace("#", "_", regex=False)
 
-    return pandas_udf(norm, StringType())
+    return pandas_udf(by_ref(norm), StringType())
 
 
 @query(
@@ -98,7 +99,7 @@ def udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return ev.select("event_id", "user_id", "value").groupBy("user_id").applyInPandas(
-        zscore, "event_id long, user_id long, zscore double"
+        by_ref(zscore), "event_id long, user_id long, zscore double"
     )
 
 
@@ -111,7 +112,7 @@ def weighted_mean_by_group(events: DataFrame) -> DataFrame:
         den = w.sum()
         return float((v * w).sum() / den) if den else 0.0
 
-    udaf = pandas_udf(wmean, DoubleType())
+    udaf = pandas_udf(by_ref(wmean), DoubleType())
     return events.groupBy("event_type").agg(
         udaf(F.col("value"), F.abs("value")).alias("wmean")
     )
@@ -136,7 +137,7 @@ def tokenize_udtf(events_or_docs: DataFrame, col: str = "text") -> DataFrame:
                 }
             )
 
-    return events_or_docs.mapInPandas(gen, "doc_id long, pos int, token string")
+    return events_or_docs.mapInPandas(by_ref(gen), "doc_id long, pos int, token string")
 
 
 @query(

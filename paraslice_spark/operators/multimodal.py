@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from paraslice_spark.pyworker import by_ref
 from paraslice_spark.registry import query
 from paraslice_spark.sources.io import load_tables
 
@@ -76,7 +77,8 @@ def decode_media(media_df: DataFrame) -> DataFrame:
             yield out
 
     return media_df.mapInPandas(
-        decode, "media_id long, width int, height int, payload_bytes long, n_pixels long"
+        by_ref(decode),
+        "media_id long, width int, height int, payload_bytes long, n_pixels long",
     )
 
 
@@ -96,7 +98,9 @@ def resize_media(media_df: DataFrame, scale: float = 0.5) -> DataFrame:
                 }
             )
 
-    return media_df.mapInPandas(resize, "media_id long, width int, height int, media binary")
+    return media_df.mapInPandas(
+        by_ref(resize), "media_id long, width int, height int, media binary"
+    )
 
 
 def frame_sample(media_df: DataFrame, every: int = 4) -> DataFrame:
@@ -114,7 +118,7 @@ def frame_sample(media_df: DataFrame, every: int = 4) -> DataFrame:
                     sums.append(sum(payload[fi * 16 : fi * 16 + 16]) % 65536)
             yield pd.DataFrame({"media_id": ids, "frame_idx": frames, "checksum": sums})
 
-    return media_df.mapInPandas(sample, "media_id long, frame_idx int, checksum int")
+    return media_df.mapInPandas(by_ref(sample), "media_id long, frame_idx int, checksum int")
 
 
 @query(
@@ -183,7 +187,7 @@ def feature_extract(media_df: DataFrame) -> DataFrame:
     schema = "media_id long, n_bytes long, byte_sum long, " + ", ".join(
         f"h{i} long" for i in range(16)
     )
-    return media_df.mapInPandas(extract, schema)
+    return media_df.mapInPandas(by_ref(extract), schema)
 
 
 @query(
@@ -328,7 +332,7 @@ def phash_pairs(media: DataFrame) -> DataFrame:
     # without a checkpoint BOTH sides re-scan the documents parquet and
     # re-run the Python dhash kernel over the full media column.  The
     # checkpointed frame is two longs per media item.
-    h = media.mapInPandas(dhash, "media_id long, phash long").localCheckpoint(
+    h = media.mapInPandas(by_ref(dhash), "media_id long, phash long").localCheckpoint(
         eager=False
     )
     bands = h.select(

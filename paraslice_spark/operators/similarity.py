@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from paraslice_spark.functions.canon import md5_u32, md5_u32_sql, rnd
 from paraslice_spark.memo import _free_local_checkpoint, memo
+from paraslice_spark.pyworker import by_ref
 from paraslice_spark.registry import query
 from paraslice_spark.sources.io import load_tables, spread_scan
 
@@ -256,7 +257,7 @@ def _ivf_assign_udf(cents, n_probe: int):
         top = np.argsort(-sims, axis=1)[:, :n_probe]
         return pd.Series(list(top.astype(np.int64)))
 
-    return pandas_udf(fn, "array<long>")
+    return pandas_udf(by_ref(fn), "array<long>")
 
 
 @query("similarity_ivf_ann")  # rows-only: quantizer cells are model-internal
@@ -369,7 +370,7 @@ def _pq_encode_udf(cents, books):
             out[:, 1 + mm] = d.argmin(1)
         return pd.Series(list(out))
 
-    return pandas_udf(fn, "array<long>")
+    return pandas_udf(by_ref(fn), "array<long>")
 
 
 @query("similarity_ivfpq_ann")  # rows-only: quantizer/codebooks model-internal
@@ -438,6 +439,7 @@ def similarity_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NB: no type hints — pandas_udf hint inference can't resolve the
     # locally-imported pd name (CLAUDE.md trap)
     @pandas_udf("double")
+    @by_ref
     def adc(q_id, cell, codes):
         idx = np.array([lut_keys[(q, c)] for q, c in zip(q_id, cell)])
         cm = np.stack(codes.to_numpy()).astype(np.int64)  # (n, M)
@@ -1727,7 +1729,7 @@ def embedding_near_dup_pairs(
         )
         return pd.Series(list(out))
 
-    buckets_udf = pandas_udf(buckets_fn, "array<long>")
+    buckets_udf = pandas_udf(by_ref(buckets_fn), "array<long>")
     # base feeds the signature UDF and both verify-join sides; the declared
     # query passes the memoized _emb_base_cached checkpoint, generic/test
     # callers fall back to a per-call non-eager localCheckpoint (one
@@ -1753,7 +1755,7 @@ def embedding_near_dup_pairs(
         nb = np.sqrt((mb * mb).sum(axis=1))
         return pd.Series(np.round(dots / (na * nb), 6))
 
-    cos_udf = pandas_udf(cos_fn, "double")
+    cos_udf = pandas_udf(by_ref(cos_fn), "double")
     # distinct on the ID pair only (hashing 2×64-double payloads through the
     # dedup shuffle would dominate at scale), then join the vectors back
     # once for the verify — same shape as minhash_near_dup_pairs
@@ -1946,7 +1948,7 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"i": iu.astype("int64"), "j": ju.astype("int64"), "p": acc[iu, ju]}
             )
 
-    partials = base.mapInPandas(partial_gram, "i long, j long, p long")
+    partials = base.mapInPandas(by_ref(partial_gram), "i long, j long, p long")
     return partials.groupBy("i", "j").agg(F.sum("p").alias("gram_micro"))
 
 
@@ -2138,7 +2140,7 @@ def _knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out_c.extend(float(x) for x in c[keep])
             yield pd.DataFrame({"vec_id": out_v, "neighbor_id": out_n, "cos": out_c})
 
-    cand = tiles.mapInPandas(tile_topk, "vec_id long, neighbor_id long, cos double")
+    cand = tiles.mapInPandas(by_ref(tile_topk), "vec_id long, neighbor_id long, cos double")
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos_r"), "neighbor_id")
     return (
         cand.withColumn("cos_r", rnd(F.col("cos"), 6))
@@ -2564,7 +2566,7 @@ def signlsh_ann(e: DataFrame) -> DataFrame:
 
     from pyspark.sql.functions import pandas_udf
 
-    buckets_udf = pandas_udf(buckets_fn, "array<long>")
+    buckets_udf = pandas_udf(by_ref(buckets_fn), "array<long>")
     # r15 (guide §4/§2.4): sig fans out four ways (corpus bands, query
     # bands, q-side and n-side re-rank) — without a checkpoint each
     # consumer re-scanned the source and re-ran the quantization (4×)
@@ -2705,7 +2707,7 @@ def _sl_sweep_sig(e: DataFrame) -> DataFrame:
 
     from pyspark.sql.functions import pandas_udf
 
-    buckets_udf = pandas_udf(sweep_buckets_fn, "array<long>")
+    buckets_udf = pandas_udf(by_ref(sweep_buckets_fn), "array<long>")
     sd = F.aggregate(
         F.zip_with(F.col("mv"), F.col("mv"), lambda x, y: x * y),
         F.lit(0).cast("long"),

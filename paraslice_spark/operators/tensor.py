@@ -51,7 +51,8 @@ PySpark 4.1.2 / CPython 3.11.7, 4-core box).
 once a worker has imported the package, so every CP-ALS stage ships code
 pickled by reference: the slab-build kernels are module-level functions
 bound with ``functools.partial``, and the sweep closures call
-:func:`_a_rows`.  Unpickling either imports the package.
+:func:`_a_rows`.  Unpickling either imports the package.  The general rule
+for a kernel that is a closure is :func:`paraslice_spark.pyworker.by_ref`.
 """
 
 from __future__ import annotations

@@ -9,13 +9,33 @@ directory (``pyspark.zip``, py4j, the Spark jar, the shipped package zip),
 keeps the re-read for an archive whose ``os.stat`` stamp changed since
 that importer last read it (rewritten in place or replaced) and skips it
 otherwise.
+
+The patch is installed by ``import paraslice_spark``, so a worker gets it
+only when a task's code imports the package.  A module-level function is
+pickled by reference and imports its module on unpickling; a closure is
+pickled by value and imports nothing of ours.  :func:`by_ref` gives every
+Python kernel that import: new ``pandas_udf`` / ``udf`` / ``mapInPandas``
+/ ``applyInPandas`` / ``applyInPandasWithState`` kernels go through it
+(``tests/test_pyworker.py`` walks the package source for that rule).
+
+A bare ``functools.partial`` would change how PySpark reads the kernel:
+``typing.get_type_hints`` raises ``TypeError`` on a partial (a hinted
+pandas UDAF loses its grouped-agg eval type), and
+``inspect.getfullargspec`` reports no positional arguments, which the
+worker uses to choose between ``f(pdf)`` and ``f(key, pdf)`` for a grouped
+map.  :func:`by_ref` copies the wrapped function's attributes
+(``__annotations__``, ``__wrapped__``, whose ``__globals__`` resolve string
+hints) and its ``__signature__`` onto the partial; both survive pickling.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import sys
 import zipimport
+from collections.abc import Callable
 
 
 def _stamp(path: str) -> tuple[int, int, int, int]:
@@ -47,3 +67,18 @@ def install() -> None:
 
     invalidate_caches.reads_changed_only = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def _call(fn, *args, **kwargs):
+    return fn(*args, **kwargs)
+
+
+def by_ref(fn: Callable) -> Callable:
+    """``fn`` behind a module-level trampoline: ``fn`` still travels by
+    value, but unpickling :func:`_call` imports this package in the worker,
+    which runs :func:`install` before the worker's next task set-up.  The
+    result reads as ``fn`` to PySpark's eval-type inference (signature,
+    type hints, name)."""
+    wrapper = functools.update_wrapper(functools.partial(_call, fn), fn)
+    wrapper.__signature__ = inspect.signature(fn)
+    return wrapper

@@ -18,6 +18,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from paraslice_spark.functions.canon import md5_u32_sql
 from paraslice_spark.memo import memo
+from paraslice_spark.pyworker import by_ref
 from paraslice_spark.registry import query
 
 #: events schema with ts as raw ns-epoch longs (synthetic replay batches and
@@ -246,7 +247,7 @@ def stream_asof_join(
         tagged.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            update,
+            by_ref(update),
             outputStructType="purchase_id long, user_id long, click_id long",
             stateStructType=(
                 "lts array<long>, lid array<long>, rts array<long>, rid array<long>"
@@ -420,7 +421,7 @@ def running_count_per_user(events: DataFrame) -> DataFrame:
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
 
     return events.groupBy("user_id").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType="user_id long, n_events long",
         stateStructType="n long",
         outputMode="update",
@@ -473,7 +474,7 @@ def stream_dedup_incremental(docs: DataFrame) -> DataFrame:
 
     keyed = docs.select(fp_shingle_col().alias("fp_shingle"), "doc_id")
     return keyed.groupBy("fp_shingle").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType="doc_id long, fp_shingle string",
         stateStructType="kept long",
         outputMode="append",
@@ -523,7 +524,7 @@ def stream_retention(events: DataFrame) -> DataFrame:
 
     keyed = events.select("user_id", "ts_ns")
     return keyed.groupBy("user_id").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType="user_id long, cohort_day long, day_offset long",
         stateStructType="cohort long, mask long",
         outputMode="append",
@@ -563,7 +564,7 @@ def stream_cumulative_distinct(events: DataFrame) -> DataFrame:
 
     keyed = events.select("user_id", "ts_ns", "event_id", "event_type")
     return keyed.groupBy("user_id").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType="event_id long, user_id long, n_distinct_types long",
         stateStructType="seen string",
         outputMode="append",
@@ -610,7 +611,7 @@ def stream_sessionize(events: DataFrame, gap_ns: int = 1_800_000_000_000) -> Dat
         yield pd.DataFrame(out, columns=["event_id", "user_id", "session_idx"])
 
     return events.groupBy("user_id").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType="event_id long, user_id long, session_idx long",
         stateStructType="last_ts long, idx long",
         outputMode="append",
@@ -669,7 +670,7 @@ def stream_funnel(events: DataFrame) -> DataFrame:
 
     keyed = events.select("user_id", "ts_ns", "event_id", "event_type")
     return keyed.groupBy("user_id").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType=(
             "user_id long, t_view long, t_click long, t_purchase long, stage int"
         ),
@@ -820,7 +821,7 @@ def stream_scd2(events: DataFrame) -> DataFrame:
         )
 
     return events.groupBy("user_id").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType=(
             "user_id long, ver long, status string, valid_from_ns long, "
             "valid_to_ns long, n_events long"
@@ -862,7 +863,7 @@ def stream_user_traffic(events: DataFrame) -> DataFrame:
 
     keyed = events.select("user_id")
     return keyed.groupBy("user_id").applyInPandasWithState(
-        update,
+        by_ref(update),
         outputStructType="user_id long, n long",
         stateStructType="n long",
         outputMode="append",

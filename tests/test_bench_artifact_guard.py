@@ -1,4 +1,5 @@
-"""bench.py artifact guards (VERDICT r15 #1/#2) — pure-python, no Spark.
+"""bench.py artifact guards (VERDICT r15 #1/#2) — pure-python, no Spark,
+except the sf0.001 test of the per-query timing maps.
 
 The canonical BENCH_LOCAL.json must survive the driver's out-of-band
 scaling-arm runs (SPARK_GRAFT_CPUS != 32): those runs get their own
@@ -78,3 +79,23 @@ def test_restored_canonical_artifact_in_repo_is_32_core():
         d = json.load(fh)
     assert d.get("cpus", 32) == 32
     assert d["value"] > 0 and len(d["queries"]) >= 298
+
+
+def test_time_queries_records_every_run(bench, spark):
+    """``queries_runs`` keeps all N run times per query in run order; the
+    best-of-N ``queries`` headline and ``queries_run1`` derive from it."""
+    from tests.conftest import SF_SMALL
+
+    from paraslice_spark.registry import QUERIES
+
+    names = ("q6_forecast_revenue", "udf_grouped_map", "udf_scalar_py")
+    timed = bench.time_queries(spark, SF_SMALL, {n: QUERIES[n] for n in names}, 3)
+    assert set(timed) == {
+        "queries", "queries_runs", "queries_run1", "memo_builds", "steal_suspect_queries",
+    }
+    runs = timed["queries_runs"]
+    assert sorted(runs) == sorted(names)
+    for name in names:
+        assert len(runs[name]) == 3 and all(t > 0 for t in runs[name])
+        assert timed["queries"][name] == min(runs[name])
+        assert timed["queries_run1"][name] == runs[name][0]
